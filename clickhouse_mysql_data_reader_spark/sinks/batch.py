@@ -44,21 +44,20 @@ def write_parquet(
     landed month untouched — the safe daily/monthly re-run primitive
     (a plain "overwrite" would drop the whole table; the reference's
     recipe for a bad day is a manual DROP PARTITION + re-copy,
-    docs/manual.md). Static vs dynamic is a session conf in Spark, so
-    it is set per-write here and restored after.
+    docs/manual.md). Dynamic mode is a per-write option, never the
+    session conf, so concurrent writes from other driver threads keep
+    their own (static) overwrite semantics.
     """
     if replace_partitions and not date_col:
         raise ValueError("write_parquet: replace_partitions needs date_col")
     if replace_partitions:
         df = with_month_partition(df, date_col)
-        spark = df.sparkSession
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, "STATIC")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(YYYYMM_COL).parquet(path)
-        finally:
-            spark.conf.set(conf_key, prev)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(YYYYMM_COL)
+            .parquet(path)
+        )
         return
     writer = df.write.mode(mode)
     if date_col:

@@ -29,6 +29,7 @@ table reads and rewrites only that month.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -41,6 +42,7 @@ from pyspark.sql import types as T
 
 from clickhouse_mysql_data_reader_spark.catalog.names import NameResolver
 from clickhouse_mysql_data_reader_spark.operators.cdc import apply_cdc_batch
+from clickhouse_mysql_data_reader_spark.util import overlap_jobs
 
 CDC_ENVELOPE = T.StructType(
     [
@@ -345,10 +347,11 @@ def start_pump(
     the per-table belt routing of bbpool.py:13-28 as a groupBy — and
     merged into its snapshot. Returns the StreamingQuery.
 
-    Tables touched in one micro-batch are applied CONCURRENTLY from a
-    driver-side thread pool (Spark's scheduler accepts jobs from many
-    driver threads) — a serial loop would turn a 500-table CDC topology
-    into 500 small back-to-back Spark jobs per trigger. Concurrency is
+    Tables touched in one micro-batch are applied CONCURRENTLY from
+    driver threads through ``util.overlap_jobs``, at most
+    ``max_parallel_tables`` at once (Spark's scheduler accepts jobs from
+    many driver threads) — a serial loop would turn a 500-table CDC
+    topology into 500 small back-to-back Spark jobs per trigger. Concurrency is
     keyed on the DESTINATION snapshot dir, not the source table: the
     store's NameResolver supports many-to-one fan-in (dst_table /
     rename_map), and two threads applying into one dir would race the
@@ -387,18 +390,10 @@ def start_pump(
                 for db, table in group:
                     apply_one(db, table)
 
-            groups = list(by_dest.values())
-            if len(groups) <= 1:
-                for g in groups:
-                    apply_dest(g)
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(max_parallel_tables, len(groups))
-                ) as pool:
-                    # list() drains the iterator -> first failure raises
-                    list(pool.map(apply_dest, groups))
+            overlap_jobs(
+                {d: functools.partial(apply_dest, g) for d, g in by_dest.items()},
+                max_workers=max_parallel_tables,
+            )
         finally:
             batch_df.unpersist()
 

@@ -138,7 +138,19 @@ def test_with_month_partition_value(spark):
     assert with_month_partition(df, "d").collect()[0]["_yyyymm"] == 201803
 
 
-def test_write_parquet_replace_partitions_is_idempotent(spark, tmp_path):
+def test_write_parquet_replace_partitions_is_idempotent(spark, tmp_path, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+
+    # dynamic overwrite is a per-write option: setting the session conf
+    # would race writes running at the same time on other driver threads
+    conf_keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        conf_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     p = str(tmp_path / "landed")
     day = lambda d, v: (d, v)
     df1 = spark.createDataFrame(
@@ -167,6 +179,7 @@ def test_write_parquet_replace_partitions_is_idempotent(spark, tmp_path):
     assert spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "STATIC"
     ).upper() == "STATIC"
+    assert "spark.sql.sources.partitionOverwriteMode" not in conf_keys
 
     with pytest.raises(ValueError, match="needs date_col"):
         write_parquet(feb_fix, p, replace_partitions=True)

@@ -7,12 +7,17 @@ acceptance method (docs/manual.md:436-443, count reconciliation).
 from __future__ import annotations
 
 import json
+import shutil
+import sys
+import threading
+import time
+from collections import Counter
 
 import pytest
 
 from clickhouse_mysql_data_reader_spark.cli import run
 from clickhouse_mysql_data_reader_spark.config import AppConfig, parse_config
-from clickhouse_mysql_data_reader_spark.migrator import Migrator
+from clickhouse_mysql_data_reader_spark.migrator import MigrationReport, Migrator
 
 SF = "/root/testdata/sf0.001"
 
@@ -270,6 +275,123 @@ def test_migrate_to_csv_roundtrip(spark, tmp_path):
     )
     [report] = mig.migrate_all()
     assert report.reconciled and report.src_rows == 5
+
+
+def test_migrate_all_fan_in_lands_every_row(spark, tmp_path):
+    """--dst-table fan-in of two same-schema tables into one destination
+    table: the tables land one after the other, in sorted order, and
+    nothing is lost. dst_rows counts the whole shared destination, so
+    each report's dst_rows is the running total of the src_rows so far
+    (only the first report reconciles on its own)."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in ("nation_b", "nation_a"):
+        shutil.copy(f"{SF}/nation.parquet", src / f"{name}.parquet")
+    mig = _mig(
+        spark,
+        [
+            "--migrate-table",
+            "--src-parquet-dir", str(src),
+            "--src-schemas", "fanin",
+            "--src-tables", "nation_a,nation_b",
+            "--src-tables-where-clauses", "n_regionkey >= 0,n_regionkey = 0",
+            "--dst-parquet-dir", str(tmp_path / "dst"),
+            "--dst-table", "nations",
+            "--dst-create-table",
+            "--with-create-database",
+        ],
+    )
+    reports = mig.migrate_all()
+    assert [r.src_table for r in reports] == ["nation_a", "nation_b"]
+    assert {(r.dst_db, r.dst_table) for r in reports} == {("fanin", "nations")}
+    assert [r.src_rows for r in reports] == [25, 5]
+    assert [r.dst_rows for r in reports] == [25, 30]
+    assert reports[0].reconciled
+    assert spark.table("fanin.nations").count() == 30
+
+
+def _record_migrations(monkeypatch, dest_of, wait):
+    """Replace Migrator.migrate_table with a fake that records, per
+    destination, the order tables ran in and the most that ever ran at
+    once; ``wait(table)`` runs while the table counts as active."""
+    lock = threading.Lock()
+    active, peak, ran = Counter(), Counter(), {}
+
+    def fake(self, db, table):
+        dest = dest_of(self, db, table)
+        with lock:
+            active[dest] += 1
+            peak[dest] = max(peak[dest], active[dest])
+            ran.setdefault(dest, []).append((db, table))
+        try:
+            wait(table)
+        finally:
+            with lock:
+                active[dest] -= 1
+        dst_db, dst_table = self.resolver.resolve(db, table)
+        return MigrationReport(db, table, dst_db, dst_table, None, None, 1, 1)
+
+    monkeypatch.setattr(Migrator, "migrate_table", fake)
+    return peak, ran
+
+
+# discovery order deliberately unsorted: runs go in sorted order per
+# destination, reports come back in this order; six source dbs give
+# more --dst-table destinations than the 4 worker threads
+_DISCOVERED = {f"db{i}": ["region", "orders", "nation"] for i in (3, 5, 1, 4, 0, 2)}
+
+
+def test_migrate_all_overlaps_distinct_destinations(spark, monkeypatch):
+    """Two tables bound for different destinations run at the same time:
+    each waits at a two-party barrier, which a serial loop never lets
+    through."""
+    barrier = threading.Barrier(2, timeout=30)
+    mig = _mig(
+        spark,
+        ["--migrate-table", "--src-parquet-dir", SF, "--dst-parquet-dir", "/tmp/unused"],
+    )
+    monkeypatch.setattr(
+        Migrator, "discover", lambda self: {"db": ["region", "nation"]}
+    )
+    peak, _ = _record_migrations(
+        monkeypatch, lambda self, db, table: table, lambda table: barrier.wait()
+    )
+    reports = mig.migrate_all()
+    assert [r.src_table for r in reports] == ["region", "nation"]
+    assert set(peak.values()) == {1}
+
+
+@pytest.mark.parametrize(
+    "dst_args",
+    [["--dst-parquet-dir", "/tmp/unused", "--dst-table", "unified"],
+     ["--dst-file", "/tmp/unused.csv"]],
+    ids=["dst_table", "dst_file"],
+)
+def test_migrate_all_serializes_each_destination(spark, monkeypatch, dst_args):
+    """Under --dst-table fan-in (one destination per source db) and under
+    --dst-file (one destination in all), no two tables of one
+    destination ever overlap, each destination runs its tables in
+    sorted order, and reports come back in discovery order."""
+    mig = _mig(spark, ["--migrate-table", "--src-parquet-dir", SF, *dst_args])
+    monkeypatch.setattr(Migrator, "discover", lambda self: _DISCOVERED)
+
+    def dest_of(self, db, table):
+        return self.cfg.dst.file or self.resolver.resolve(db, table)
+
+    peak, ran = _record_migrations(monkeypatch, dest_of, lambda table: time.sleep(0.05))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reports = mig.migrate_all()
+    finally:
+        sys.setswitchinterval(switch)
+
+    discovered = [(db, t) for db, ts in sorted(_DISCOVERED.items()) for t in ts]
+    assert [(r.src_db, r.src_table) for r in reports] == discovered
+    assert len(ran) == (1 if "--dst-file" in dst_args else len(_DISCOVERED))
+    assert set(peak.values()) == {1}
+    for group in ran.values():
+        assert group == sorted(group)
 
 
 # -- cli: verbs end-to-end --------------------------------------------------
