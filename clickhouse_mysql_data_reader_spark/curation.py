@@ -1028,7 +1028,7 @@ def _image_sigs(
 ) -> DataFrame:
     """(doc_id, dhash) perceptual fingerprints for the image-bearing
     rows of a corpus frame — shared by batch ``curate``, both
-    ``curate_increment`` stages, and ``CurationState._derive`` so the
+    ``curate_increment`` stages, and the ``image`` side table so the
     four can never fingerprint differently. NULL-image rows are
     excluded BEFORE the decode: under the deterministic fake every
     NULL would hash to the same 'image' and the whole imageless corpus
@@ -1669,24 +1669,222 @@ def curate(
     )
 
 
+def _embed_rows(state, kept: DataFrame, id_col: str) -> dict:
+    """Landed vectors + their SRP bands, with the same
+    ``srp_band_table`` geometry ``_semantic_edge_set`` probes with."""
+    from clickhouse_mysql_data_reader_spark.operators.similarity import (
+        as_double_array,
+        srp_band_table,
+    )
+
+    vecs = kept.select(
+        F.col(id_col).alias("doc_id"),
+        as_double_array(state.embed_col).alias("v"),
+    )
+    srp = srp_band_table(
+        vecs,
+        state.embed_dim,
+        n_bits=state.embed_bits,
+        n_bands=state.embed_srp_bands,
+        id_col="doc_id",
+        vec_col="v",
+        seed=state.embed_seed,
+    ).withColumnRenamed("vid", "doc_id")
+    return {"embeddings": vecs, "srp_bands": srp}
+
+
+def _video_rows(state, kept: DataFrame, id_col: str) -> dict:
+    # a minimal cfg view carries the state's pinned geometry
+    cfg_view = CurationConfig(
+        video_min_matching=1,
+        video_col=state.video_col,
+        video_duration_col=state.video_duration_col,
+        video_every_ms=state.video_every_ms,
+        video_grid_w=state.video_grid_w,
+        video_grid_h=state.video_grid_h,
+        video_decode_fn=state.video_decode_fn,
+    )
+    return {"video_fps": _video_sigs(kept, id_col, cfg_view)}
+
+
+@dataclass(frozen=True)
+class SideTable:
+    """One optional modality of ``CurationState``: the tables its
+    cross-history probe reads and what the state needs to land,
+    validate and backfill them. Attribute names are shared by the
+    ``CurationState`` constructor and ``CurationConfig``."""
+
+    name: str
+    # landed tables, in write order
+    tables: tuple[str, ...]
+    # first-writer-wins manifest of the derivation parameters
+    manifest: str
+    # (manifest key, state attribute) pairs: the manifest payload
+    pinned: tuple[tuple[str, str], ...]
+    # state attribute that enables the side when not None
+    enabled_by: str
+    # cfg field that turns the side's probe on when not None
+    cfg_enable: str
+    # (cfg field, state attribute) pairs curate_increment compares
+    cfg_match: tuple[tuple[str, str], ...]
+    # (decode_fn, decoder_tag) attributes, compared as the resolved tag
+    decoder: tuple[str, str] | None
+    # attributes naming the input columns ``derive`` reads
+    inputs: tuple[str, ...]
+    # (state, kept, id_col) -> {table: rows}; the signature code the
+    # edge stages probe with, so landed rows match a probe's
+    derive: Callable
+
+    def enabled(self, state) -> bool:
+        return getattr(state, self.enabled_by) is not None
+
+    @property
+    def backfill_call(self) -> str:
+        return f"backfill({self.name!r}, historical_kept_corpus)"
+
+
+_SIDES = (
+    SideTable(
+        name="embed",
+        tables=("embeddings", "srp_bands"),
+        manifest="_embed_params.json",
+        pinned=(
+            ("embed_dim", "embed_dim"),
+            ("embed_bits", "embed_bits"),
+            ("embed_srp_bands", "embed_srp_bands"),
+            ("embed_seed", "embed_seed"),
+        ),
+        enabled_by="embed_dim",
+        cfg_enable="embed_near_cos",
+        cfg_match=(
+            ("embed_dim", "embed_dim"),
+            ("embed_bits", "embed_bits"),
+            ("embed_srp_bands", "embed_srp_bands"),
+            ("embed_seed", "embed_seed"),
+            ("embed_col", "embed_col"),
+        ),
+        decoder=None,
+        inputs=("embed_col",),
+        derive=_embed_rows,
+    ),
+    SideTable(
+        name="image",
+        tables=("image_fps",),
+        manifest="_image_params.json",
+        pinned=(
+            ("image_grid_w", "image_grid_w"),
+            ("image_grid_h", "image_grid_h"),
+            ("image_decoder", "image_decoder_tag"),
+        ),
+        enabled_by="image_grid_w",
+        cfg_enable="image_near_hamming",
+        cfg_match=(
+            ("image_grid_w", "image_grid_w"),
+            ("image_grid_h", "image_grid_h"),
+            ("image_col", "image_col"),
+        ),
+        decoder=("image_decode_fn", "image_decoder_tag"),
+        inputs=("image_col",),
+        derive=lambda st, kept, id_col: {
+            "image_fps": _image_sigs(
+                kept, id_col, st.image_col, st.image_grid_w,
+                st.image_grid_h, st.image_decode_fn,
+            )
+        },
+    ),
+    SideTable(
+        name="audio",
+        tables=("audio_fps",),
+        manifest="_audio_params.json",
+        pinned=(
+            ("audio_n_windows", "audio_n_windows"),
+            ("audio_decoder", "audio_decoder_tag"),
+        ),
+        enabled_by="audio_n_windows",
+        cfg_enable="audio_near_hamming",
+        cfg_match=(
+            ("audio_n_windows", "audio_n_windows"),
+            ("audio_col", "audio_col"),
+        ),
+        decoder=("audio_decode_fn", "audio_decoder_tag"),
+        inputs=("audio_col",),
+        derive=lambda st, kept, id_col: {
+            "audio_fps": _audio_sigs(
+                kept, id_col, st.audio_col, st.audio_n_windows,
+                st.audio_decode_fn,
+            )
+        },
+    ),
+    SideTable(
+        name="video",
+        tables=("video_fps",),
+        manifest="_video_params.json",
+        pinned=(
+            ("video_every_ms", "video_every_ms"),
+            ("video_grid_w", "video_grid_w"),
+            ("video_grid_h", "video_grid_h"),
+            ("video_decoder", "video_decoder_tag"),
+        ),
+        enabled_by="video_every_ms",
+        cfg_enable="video_min_matching",
+        cfg_match=(
+            ("video_every_ms", "video_every_ms"),
+            ("video_grid_w", "video_grid_w"),
+            ("video_grid_h", "video_grid_h"),
+            ("video_col", "video_col"),
+            ("video_duration_col", "video_duration_col"),
+        ),
+        decoder=("video_decode_fn", "video_decoder_tag"),
+        inputs=("video_col", "video_duration_col"),
+        derive=_video_rows,
+    ),
+)
+
+
+def _side(side: SideTable | str) -> SideTable:
+    """A ``_SIDES`` entry from itself or its name."""
+    if isinstance(side, SideTable):
+        return side
+    for s in _SIDES:
+        if s.name == side:
+            return s
+    raise ValueError(
+        f"unknown side {side!r}: expected one of {[s.name for s in _SIDES]}"
+    )
+
+
 class CurationState:
-    """Landed dedup state of the already-curated corpus — the sidecar
+    """Landed dedup state of the already-curated corpus: the sidecar
     tables an incremental (daily-batch) pipeline needs to dedup NEW
     documents against everything kept so far WITHOUT recomputing the
-    historical corpus:
+    historical corpus. Each table is one plain parquet dir under
+    ``state_dir`` (partition/bucket it by its join key at real scale),
+    read with ``read(spark, table)``. State grows with the KEPT corpus
+    only (dropped docs contribute nothing).
+
+    Core tables, landed by ``write``:
 
     - ``fingerprints``: (doc_id, fp) md5 content fingerprints (exact dedup)
     - ``bands``:        (doc_id, band_id, band_hash) LSH buckets (near-dup
       candidate generation)
     - ``shingles``:     (doc_id, sh_h) shingle hashes (Jaccard verify)
-    - ``prefixes``:     (doc_id, sh_h) AllPairs prefix shingles — OPTIONAL
-      (lands only when ``jaccard_exact_threshold``/
-      ``containment_threshold`` is set); the exact candidate source for
-      ``near_dup_exact``/``near_dup_containment`` in increments
+    - ``prefixes``:     (doc_id, sh_h) AllPairs prefix shingles, only
+      when ``jaccard_exact_threshold``/``containment_threshold`` is
+      set: the exact candidate source for ``near_dup_exact``/
+      ``near_dup_containment`` in increments
 
-    All three are plain parquet — partition/bucket them by their join
-    key at real scale. ``append`` adds a new batch's rows; state grows
-    with the KEPT corpus only (dropped docs contribute nothing).
+    ``curate_increment`` also appends ``line_fps`` (``dedup_lines``)
+    and ``splits`` (``split_fractions``).
+
+    Side tables: one ``SideTable`` per modality in ``_SIDES``, each
+    switched on by one constructor argument (``side.enabled_by``):
+    ``embed`` lands ``embeddings`` + ``srp_bands`` (``embed_dim``),
+    ``image`` lands ``image_fps`` (``image_grid_w``), ``audio`` lands
+    ``audio_fps`` (``audio_n_windows``) and ``video`` lands
+    ``video_fps`` (``video_every_ms``). ``landed(spark, side)`` probes
+    a side. Enabling a side on a state with landed batches needs
+    ``backfill(side, historical_kept_corpus)`` once: the state keeps
+    keys, not content, so the caller supplies the corpus.
 
     Every row carries an ``(_run, _epoch)`` tag (``("", -1)`` for plain
     batch appends; the stream's run id + foreachBatch epoch id for
@@ -1698,11 +1896,13 @@ class CurationState:
     run id is what keeps one run's exclusion from hiding another run's
     genuine history.
 
-    The MinHash/LSH parameters the landed tables were derived with are
-    persisted in ``_params.json`` at first write and validated on
-    every subsequent write and incremental read-path — a session that
-    reconstructs ``CurationState`` with different parameters would
-    otherwise silently find zero cross-history near-dups.
+    The parameters the landed tables were derived with are pinned in
+    first-writer-wins manifests — ``_params.json`` (MinHash/LSH),
+    ``_bloom_params.json``, ``_prefix_params.json`` and one per side
+    (``side.manifest``) — and validated on every subsequent write and
+    incremental read path: a session that reconstructs
+    ``CurationState`` with different parameters would otherwise
+    silently find zero cross-history near-dups.
     """
 
     def __init__(
@@ -1739,27 +1939,17 @@ class CurationState:
         self.state_dir = str(state_dir)
         self.minhash_k = minhash_k
         self.lsh_bands = lsh_bands
-        # Opt-in IMAGE near-dup support for increments
-        # (cfg.image_near_hamming): when ``image_grid_w`` is set,
-        # write() additionally lands ``image_fps`` (doc_id, dhash) —
-        # later batches generate cross-history image candidates by
-        # chunk-bucket-joining their dHash longs against the landed
-        # ones (operators/dedup.py simhash_near_pairs_cross) and the
-        # exact Hamming verify runs on the joined longs directly, so
-        # unlike the embed tables ONE landed table carries both the
-        # candidate and verify sides (8 bytes per image-bearing kept
-        # doc). The GRID geometry and the decoder identity tag are
-        # pinned in ``_image_params.json`` — fingerprints derived with
-        # a different grid or decoder can never match the landed ones
-        # (silently missed image dups), same first-writer-wins
-        # manifest protocol as minhash/bloom/prefix/embed. The HAMMING
-        # budget is deliberately not pinned: the verify is exact over
-        # the landed longs, so a later batch may probe at any budget
-        # the bit width divides. ``image_col``/``image_decode_fn`` are
-        # derive-time inputs (cosmetic / injectable seam), not
-        # manifest state. Enabling on a state with landed batches
-        # needs ``backfill_image_fps`` (like embeddings, the state
-        # keeps keys, not media bytes).
+        # IMAGE side (cfg.image_near_hamming): ``image_fps`` (doc_id,
+        # dhash). Later batches chunk-bucket-join their dHash longs
+        # against the landed ones (operators/dedup.py
+        # simhash_near_pairs_cross) and the exact Hamming verify runs
+        # on the joined longs directly, so unlike the embed side ONE
+        # table carries both the candidate and the verify side (8 bytes
+        # per image-bearing kept doc). The HAMMING budget is
+        # deliberately not pinned: the verify is exact over the landed
+        # longs, so a later batch may probe at any budget the bit width
+        # divides. ``image_col``/``image_decode_fn`` are derive-time
+        # inputs (cosmetic / injectable seam), not manifest state.
         self.image_grid_w = int(image_grid_w) if image_grid_w is not None else None
         self.image_grid_h = int(image_grid_h)
         self.image_col = str(image_col)
@@ -1767,13 +1957,9 @@ class CurationState:
         self.image_decoder_tag = _decoder_tag(
             image_decode_fn, image_decoder_tag
         )
-        # Opt-in AUDIO near-dup support (cfg.audio_near_hamming): the
-        # image stanza's exact mirror — when ``audio_n_windows`` is
-        # set, write() lands ``audio_fps`` (doc_id, ahash) and probes
-        # chunk-bucket-join the landed longs; window count + decoder
-        # tag pinned in ``_audio_params.json``; the hamming budget is
-        # probe-time-free like the image one. Enable on a landed state
-        # via ``backfill_audio_fps``.
+        # AUDIO side (cfg.audio_near_hamming): the image side over
+        # energy contours, ``audio_fps`` (doc_id, ahash); the hamming
+        # budget is probe-time-free like the image one.
         self.audio_n_windows = (
             int(audio_n_windows) if audio_n_windows is not None else None
         )
@@ -1782,14 +1968,11 @@ class CurationState:
         self.audio_decoder_tag = _decoder_tag(
             audio_decode_fn, audio_decoder_tag
         )
-        # Opt-in VIDEO near-dup support (cfg.video_min_matching): when
-        # ``video_every_ms`` is set, write() lands ``video_fps``
-        # (doc_id, fhash — one row per DISTINCT sampled-frame hash, the
-        # shingle-table shape) and probes equi-join the landed rows +
-        # count matches per pair. Sampling interval, grid geometry and
-        # decoder tag pinned in ``_video_params.json``; the MATCH
-        # THRESHOLD is probe-time-free like the hamming budgets.
-        # Enable on a landed state via ``backfill_video_fps``.
+        # VIDEO side (cfg.video_min_matching): ``video_fps`` (doc_id,
+        # fhash — one row per DISTINCT sampled-frame hash, the
+        # shingle-table shape); probes equi-join the landed rows and
+        # count matches per pair. The MATCH THRESHOLD is probe-time-free
+        # like the hamming budgets.
         self.video_every_ms = (
             int(video_every_ms) if video_every_ms is not None else None
         )
@@ -1801,26 +1984,16 @@ class CurationState:
         self.video_decoder_tag = _decoder_tag(
             video_decode_fn, video_decoder_tag
         )
-        # Opt-in SEMANTIC near-dup support for increments
-        # (cfg.embed_near_cos): when ``embed_dim`` is set, write()
-        # additionally lands ``srp_bands`` (doc_id, band_idx, band_val)
-        # and ``embeddings`` (doc_id, v) — later batches generate
-        # cross-history semantic candidates by bucket-joining their SRP
-        # bands against the landed ones and verify with the exact
-        # cosine against the landed VECTORS (storage: dim x 8 bytes per
-        # kept doc; the price of a no-false-positive verify — bands
-        # alone can only propose). The GEOMETRY (dim/bits/bands/seed)
-        # is pinned in ``_embed_params.json``: bands derived with any
-        # other geometry can never collide with the landed ones, so a
-        # mismatch means silently missed semantic dups — same
-        # first-writer-wins manifest protocol as minhash/bloom/prefix.
-        # The cosine THRESHOLD is deliberately NOT pinned: the verify
-        # is exact, so a later batch may probe at any threshold.
-        # ``embed_col`` names the vector column on incoming kept
-        # frames; cosmetic (the landed table normalizes to ``v``), so
-        # not in the manifest. Enabling on a state with landed batches
-        # needs ``backfill_embeddings`` (unlike prefixes there is
-        # nothing to derive vectors from — the state keeps no text).
+        # SEMANTIC side (cfg.embed_near_cos): ``srp_bands`` (doc_id,
+        # band_idx, band_val) and ``embeddings`` (doc_id, v). Later
+        # batches bucket-join their SRP bands against the landed ones
+        # and verify with the exact cosine against the landed VECTORS
+        # (dim x 8 bytes per kept doc; the price of a no-false-positive
+        # verify — bands alone can only propose). The cosine THRESHOLD
+        # is deliberately NOT pinned: the verify is exact, so a later
+        # batch may probe at any threshold. ``embed_col`` names the
+        # vector column on incoming kept frames; cosmetic (the landed
+        # table normalizes to ``v``), so not in the manifest.
         self.embed_dim = int(embed_dim) if embed_dim is not None else None
         if self.embed_dim is not None and embed_bits % embed_srp_bands:
             raise ValueError(
@@ -1886,39 +2059,10 @@ class CurationState:
             kw["jaccard_exact_threshold"] = cfg.near_dup_jaccard
         if cfg.near_dup_containment is not None:
             kw["containment_threshold"] = cfg.near_dup_containment
-        if cfg.embed_near_cos is not None:
-            kw.update(
-                embed_dim=cfg.embed_dim,
-                embed_bits=cfg.embed_bits,
-                embed_srp_bands=cfg.embed_srp_bands,
-                embed_seed=cfg.embed_seed,
-                embed_col=cfg.embed_col,
-            )
-        if cfg.image_near_hamming is not None:
-            kw.update(
-                image_grid_w=cfg.image_grid_w,
-                image_grid_h=cfg.image_grid_h,
-                image_col=cfg.image_col,
-                image_decode_fn=cfg.image_decode_fn,
-                image_decoder_tag=cfg.image_decoder_tag,
-            )
-        if cfg.audio_near_hamming is not None:
-            kw.update(
-                audio_n_windows=cfg.audio_n_windows,
-                audio_col=cfg.audio_col,
-                audio_decode_fn=cfg.audio_decode_fn,
-                audio_decoder_tag=cfg.audio_decoder_tag,
-            )
-        if cfg.video_min_matching is not None:
-            kw.update(
-                video_every_ms=cfg.video_every_ms,
-                video_col=cfg.video_col,
-                video_duration_col=cfg.video_duration_col,
-                video_grid_w=cfg.video_grid_w,
-                video_grid_h=cfg.video_grid_h,
-                video_decode_fn=cfg.video_decode_fn,
-                video_decoder_tag=cfg.video_decoder_tag,
-            )
+        for side in _SIDES:
+            if getattr(cfg, side.cfg_enable) is not None:
+                kw.update({a: getattr(cfg, f) for f, a in side.cfg_match})
+                kw.update({f: getattr(cfg, f) for f in side.decoder or ()})
         return cls(state_dir, **kw)
 
     def _fs(self, spark):
@@ -1926,58 +2070,40 @@ class CurationState:
         path = jvm.org.apache.hadoop.fs.Path(self.state_dir)
         return jvm, path.getFileSystem(spark._jsc.hadoopConfiguration())
 
-    # line_fps is the OPTIONAL fourth table (cfg.dedup_lines): 60-bit
-    # fingerprints of every eligible line seen in any INPUT batch (not
-    # just kept docs — the batch line pass runs before the gates, so a
-    # line of a later-dropped doc still holds keeper status, exactly as
-    # in batch curate() over the concatenated corpus). Listed in
-    # _TABLES so compact()/crash-recovery cover it; exists() still
-    # probes only the three doc tables (line state is independent).
-    # srp_bands/embeddings are the OPTIONAL fifth/sixth tables
-    # (embed_dim set): SRP band buckets + exact vectors of every KEPT
-    # doc, the cross-history semantic-dedup probe targets. Listed in
-    # _TABLES so compact()/crash-recovery/growth_report cover them;
-    # exists() still probes only the three core doc tables.
-    # image_fps is the OPTIONAL eighth table (image_grid_w set): dHash
-    # perceptual fingerprints of every image-bearing KEPT doc, the
-    # cross-history image-dedup probe target — one table serves both
-    # candidate generation (chunk bucket-join) and the exact Hamming
-    # verify (bit_count over the joined longs). Listed in _TABLES so
-    # compact()/crash-recovery/growth_report cover it; exists() still
-    # probes only the three core doc tables.
-    # splits is the OPTIONAL ninth table (cfg.split_fractions in
-    # increments): the IMMUTABLE (doc_id, component, split) assignment
-    # of every kept doc at the time it landed — what makes the
-    # leakage-safe split STABLE across daily batches (a landed doc's
-    # split never changes; a newcomer near-dup of a landed doc is
-    # dropped by history-wins, so near-twins can never straddle splits
-    # — the one surviving member carries the cluster's assignment).
-    # The split fractions + salt are pinned in ``_split_params.json``:
-    # a later batch assigning under different fractions would silently
-    # skew the landed proportions.
+    # Every table: the core ones, then each side's (see SideTable).
+    # Listing a table here puts it under compact(), crash recovery and
+    # growth_report; exists() probes only the three doc tables. Two
+    # core tables are appended by curate_increment, not write():
+    # ``line_fps`` (cfg.dedup_lines) holds the 60-bit fingerprints of
+    # every eligible line seen in any INPUT batch, not just kept docs —
+    # the batch line pass runs before the gates, so a line of a
+    # later-dropped doc still holds keeper status, exactly as in batch
+    # curate() over the concatenated corpus. ``splits``
+    # (cfg.split_fractions) holds the IMMUTABLE (doc_id, component,
+    # split) assignment of every kept doc at the time it landed, which
+    # keeps the leakage-safe split STABLE across daily batches (a
+    # newcomer near-dup of a landed doc is dropped by history-wins, so
+    # near-twins never straddle splits); its fractions + salt are
+    # pinned in ``_split_params.json``.
     _TABLES = (
         "fingerprints",
         "shingles",
         "bands",
         "line_fps",
         "prefixes",
-        "srp_bands",
-        "embeddings",
-        "image_fps",
-        "audio_fps",
-        "video_fps",
         "splits",
-    )
+    ) + tuple(t for side in _SIDES for t in side.tables)
 
     def _recover_crashed_compact(self, spark, names=None) -> list[str]:
         """Roll back a compact() interrupted between its two renames.
 
         That crash window leaves ``table`` MISSING and ``table__gc``
         holding the only copy of the state. Every state entry point
-        (``exists``/``_read``/``compact``) calls this first, because
+        (``exists``/``read``/``compact`` and the two reports) calls
+        this first, because
         each fails differently on the bare post-crash layout:
         ``exists()`` would report no history (silently re-admitting
-        every duplicate via the bootstrap path), ``_read`` would die on
+        every duplicate via the bootstrap path), ``read`` would die on
         a missing dir, and ``compact()`` would DELETE ``__gc`` as a
         crashed-run leftover — destroying the history permanently.
         Idempotent, one existence probe per table on the happy path;
@@ -2060,7 +2186,7 @@ class CurationState:
     ) -> DataFrame:
         """The landed (line_fp: long) history for the incremental line
         pass, with the same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "line_fps", exclude_epoch, run_id)
+        return self.read(spark, "line_fps", exclude_epoch, run_id)
 
     def append_line_fps(
         self,
@@ -2100,7 +2226,7 @@ class CurationState:
         exact; a doc_id appearing with two DIFFERENT assignments would
         survive the dedup and is a corruption signal, not something to
         silently collapse."""
-        return self._read(spark, "splits", exclude_epoch, run_id).dropDuplicates(
+        return self.read(spark, "splits", exclude_epoch, run_id).dropDuplicates(
             ["doc_id", "component", "split"]
         )
 
@@ -2401,7 +2527,7 @@ class CurationState:
         of an excluded epoch can surface here — tagged ("", -1) by
         ``ensure_prefixes`` — but the candidates it generates die in
         the metric verify, whose shingle read IS epoch-excluded.)"""
-        return self._read(spark, "prefixes", exclude_epoch, run_id)
+        return self.read(spark, "prefixes", exclude_epoch, run_id)
 
     def ensure_prefixes(self, spark) -> None:
         """Backfill the prefix table from the FULL landed shingle
@@ -2451,126 +2577,103 @@ class CurationState:
         if not fs.rename(hp(staging), hp(final)):
             raise IOError(f"ensure_prefixes: rename {staging} -> {final} failed")
 
-    # ---- landed SRP bands + vectors (semantic near-dup vs history) ---
-    # Correctness invariant: every landed doc's band rows AND vector
-    # row are present whenever its fingerprints are (write() lands all
-    # tables per batch; a mid-sequence crash leaves docs missing from
-    # the embed tables — cross-history semantic pairs against those
-    # docs are then MISSED, loose like every other mid-sequence crash,
-    # recoverable by replaying with (run_id, epoch_id) tags). Extra/
-    # duplicate rows are harmless: candidates are distinct()'d and the
-    # exact-cosine verify settles every candidate.
+    # ---- side tables (one SideTable per modality, see _SIDES) --------
+    # Correctness invariant: every landed doc's side rows are present
+    # whenever its fingerprints are — write() lands every side table
+    # BEFORE the fingerprints append, and backfill() covers the history
+    # a side was enabled over. A crash after a side commit leaves side
+    # rows for docs the doc tables never landed: probes get STRICTER
+    # (extra candidates the exact verify settles), never looser, where
+    # the reverse order would leave landed docs invisible to every later
+    # history probe of the side. Extra/duplicate rows are harmless the
+    # same way (candidates are distinct()'d).
 
-    def _sync_embed_params(self, spark) -> None:
-        """Mirror of _sync_bloom_params for the SRP geometry: the first
-        embed-enabled user lands ``_embed_params.json`` atomically;
-        later instances must match — bands derived with a different
-        (dim, bits, bands, seed) can NEVER collide with the landed
-        ones, i.e. silently missed semantic duplicates, not an error
-        any join would surface. A separate manifest (not _params.json)
-        because semantic dedup can be enabled later in a state's life
-        (via ``backfill_embeddings``)."""
-        mine = {
-            "embed_dim": self.embed_dim,
-            "embed_bits": self.embed_bits,
-            "embed_srp_bands": self.embed_srp_bands,
-            "embed_seed": self.embed_seed,
-        }
+    def _sync_side_params(self, spark, side) -> None:
+        """First-writer-wins manifest for one side's derivation
+        parameters (``side.pinned``): rows derived with another
+        geometry or decoder can NEVER match the landed ones, i.e.
+        silently missed cross-batch duplicates, not an error any join
+        would surface. One manifest per side (not _params.json)
+        because a side can be enabled later in a state's life (via
+        ``backfill``)."""
+        side = _side(side)
+        mine = {key: getattr(self, attr) for key, attr in side.pinned}
 
         def validate(landed: dict) -> None:
-            if self.embed_dim is None:
+            if not side.enabled(self):
                 raise ValueError(
-                    f"CurationState({self.state_dir}) has landed semantic-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without embed_dim — writes that skip the "
-                    "srp_bands/embeddings appends would leave landed docs "
-                    "invisible to every later semantic history probe "
-                    "(silently missed cross-batch semantic duplicates); "
-                    "construct with the landed geometry"
+                    f"CurationState({self.state_dir}) has landed "
+                    f"{side.name}-dedup state ({landed}) but this instance "
+                    f"was constructed without {side.enabled_by} — writes "
+                    f"that skip the {'/'.join(side.tables)} appends would "
+                    "leave landed docs invisible to every later "
+                    f"{side.name} history probe (silently missed "
+                    "cross-batch duplicates); construct with the landed "
+                    "geometry"
                 )
             if landed != mine:
                 raise ValueError(
                     f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed SRP bands were derived with "
-                    f"{landed}; band values would never collide — use the "
-                    "landed geometry (or a fresh state for new ones)"
+                    f"{mine} but the landed {side.name} state was derived "
+                    f"with {landed}; rows derived with another geometry or "
+                    "decoder never match — use the landed geometry and "
+                    "decoder (or a fresh state)"
                 )
 
         self._sync_manifest(
-            spark,
-            "_embed_params.json",
-            mine if self.embed_dim is not None else None,
-            validate,
+            spark, side.manifest, mine if side.enabled(self) else None, validate
         )
 
-    def embed_landed(self, spark) -> bool:
-        """True once a semantic batch has fully landed in BOTH embed
-        tables — probed separately from ``exists()`` because the
-        tables only exist for embed-enabled states (and may be enabled
-        later via ``backfill_embeddings``)."""
-        self._recover_crashed_compact(spark, ("srp_bands", "embeddings"))
-        return self._table_landed(spark, "srp_bands") and self._table_landed(
-            spark, "embeddings"
-        )
+    def landed(self, spark, side) -> bool:
+        """True once every table of ``side`` (a ``_SIDES`` entry or its
+        name) has fully landed — probed separately from ``exists()``
+        because side tables only exist for side-enabled states (and may
+        be enabled later via ``backfill``)."""
+        side = _side(side)
+        self._recover_crashed_compact(spark, side.tables)
+        return all(self._table_landed(spark, t) for t in side.tables)
 
-    def srp_bands(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, band_idx, band_val) SRP bucket history,
-        with the same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "srp_bands", exclude_epoch, run_id)
+    def backfill(self, side, kept: DataFrame, id_col: str = "doc_id") -> None:
+        """Enable ``side`` on a state whose batches landed before it:
+        derive and land every table of the side from the historical
+        KEPT corpus, which the CALLER must supply with the side's input
+        columns — unlike ``ensure_prefixes`` there is nothing on disk
+        to derive from (the state keeps keys, not content). A no-op
+        once the side has landed. OFFLINE op: quiesce writers first.
 
-    def embeddings(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, v: array<double>) vector history — the
-        exact-cosine verify side of the semantic probe."""
-        return self._read(spark, "embeddings", exclude_epoch, run_id)
-
-    def backfill_embeddings(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable semantic dedup on a state whose batches landed BEFORE
-        embed support: derive and land both embed tables from the
-        historical KEPT corpus, which the CALLER must supply with its
-        vector column (``embed_col``) — unlike ``ensure_prefixes``
-        there is nothing on disk to derive vectors from (the state
-        keeps keys, not content). OFFLINE op: quiesce writers first.
-        Crash-safe via the ensure_prefixes staging protocol (write to
-        ``__bf`` dirs, rename into place; a retry clears stale
-        leftovers). Rows are tagged ``("", -1)`` like any backfill —
-        epoch exclusion is settled by the exact verify, exactly as
-        documented on ``prefixes``."""
+        Crash-safe via the ensure_prefixes staging protocol: each table
+        is written to a ``__bf`` dir and renamed into place; a retry
+        clears stale leftovers. A crash BETWEEN the renames of a
+        multi-table side leaves one table committed; the retry
+        re-derives it only if the supplied corpus has exactly the
+        landed doc ids (a different corpus would silently rewrite
+        history). Rows are tagged ``("", -1)`` like any backfill —
+        epoch exclusion is settled by the exact verify, as documented
+        on ``prefixes``."""
+        side = _side(side)
         spark = kept.sparkSession
-        if self.embed_dim is None:
+        if not side.enabled(self):
             raise ValueError(
-                "backfill_embeddings needs an embed-enabled state — "
-                "construct CurationState with embed_dim (and the rest of "
-                "the SRP geometry) first"
+                f"backfill({side.name!r}) needs a {side.name}-enabled state "
+                f"— construct CurationState with {side.enabled_by} (and the "
+                "rest of the side's geometry) first"
             )
-        self._sync_embed_params(spark)
-        if self.embed_landed(spark):
+        self._sync_side_params(spark, side)
+        if self.landed(spark, side):
             return
-        emb, srp = self._derive_embed(kept, id_col)
+        rows = self._derive_side(side, kept, id_col)
         jvm, fs = self._fs(spark)
         hp = jvm.org.apache.hadoop.fs.Path
-        for name, rows in (("embeddings", emb), ("srp_bands", srp)):
+        for name in side.tables:
             final = self._path(name)
             staging = final + "__bf"
             if fs.exists(hp(staging)):
                 fs.delete(hp(staging), True)  # crashed earlier attempt
-            if fs.exists(hp(final)):
-                # A final dir can only come from a COMMITTED rename of
-                # a prior backfill attempt that crashed between the two
-                # renames (staging never becomes final otherwise), so
-                # this table is fully landed — embed_landed() is False
-                # only because its sibling is missing. Re-deriving is
-                # correct ONLY when the retry supplies the identical
-                # historical kept corpus; guard that instead of
-                # assuming it (a different corpus here would silently
-                # rewrite history with mismatched vectors).
+            if self._table_landed(spark, name):
+                # a committed table beside a missing sibling: a prior
+                # attempt crashed between its renames
                 landed_ids = spark.read.parquet(final).select("doc_id").distinct()
-                supplied = kept.select(F.col(id_col).alias("doc_id")).distinct()
+                supplied = rows[name].select("doc_id").distinct()
                 mismatch = (
                     landed_ids.exceptAll(supplied)
                     .unionByName(supplied.exceptAll(landed_ids))
@@ -2579,380 +2682,36 @@ class CurationState:
                 )
                 if mismatch:
                     raise ValueError(
-                        f"backfill_embeddings retry: landed {name} doc_ids "
-                        "differ from the supplied kept corpus — a retry "
-                        "must pass the SAME historical corpus as the "
+                        f"backfill({side.name!r}) retry: landed {name} "
+                        "doc_ids differ from the supplied kept corpus — a "
+                        "retry must pass the SAME historical corpus as the "
                         "crashed attempt (delete the landed "
                         f"{final} first to backfill a different one)"
                     )
                 fs.delete(hp(final), True)
-            rows.withColumns(
+            elif fs.exists(hp(final)):
+                # uncommitted leftovers only — clear them or the rename nests
+                fs.delete(hp(final), True)
+            # tag types must MATCH write()'s appends (see ensure_prefixes)
+            rows[name].withColumns(
                 {"_epoch": F.lit(-1), "_run": F.lit("")}
             ).write.mode("overwrite").parquet(staging)
             if not fs.rename(hp(staging), hp(final)):
                 raise IOError(
-                    f"backfill_embeddings: rename {staging} -> {final} failed"
+                    f"backfill({side.name!r}): rename {staging} -> {final} failed"
                 )
 
-    def _derive_embed(self, kept: DataFrame, id_col: str):
-        """(embeddings, srp_bands) rows for a kept batch — the same
-        ``srp_band_table`` geometry ``_semantic_edge_set`` probes with,
-        so landed bands always collide with a matching-geometry
-        probe's."""
-        from clickhouse_mysql_data_reader_spark.operators.similarity import (
-            as_double_array,
-            srp_band_table,
-        )
-
-        if self.embed_col not in kept.columns:
-            raise ValueError(
-                "embed-enabled CurationState needs the "
-                f"{self.embed_col!r} vector column (array<float/double>, "
-                f"length {self.embed_dim}) on every kept batch; got "
-                f"{kept.columns}"
-            )
-        vecs = kept.select(
-            F.col(id_col).alias("doc_id"),
-            as_double_array(self.embed_col).alias("v"),
-        )
-        srp = srp_band_table(
-            vecs,
-            self.embed_dim,
-            n_bits=self.embed_bits,
-            n_bands=self.embed_srp_bands,
-            id_col="doc_id",
-            vec_col="v",
-            seed=self.embed_seed,
-        ).withColumnRenamed("vid", "doc_id")
-        return vecs, srp
-
-    def _sync_image_params(self, spark) -> None:
-        """Mirror of _sync_embed_params for the dHash derivation: the
-        first image-enabled user lands ``_image_params.json``; later
-        instances must match — fingerprints derived with a different
-        grid geometry or DECODER can never match the landed ones
-        (silently missed cross-batch image duplicates). A separate
-        manifest because image dedup can be enabled later in a state's
-        life (via ``backfill_image_fps``)."""
-        mine = {
-            "image_grid_w": self.image_grid_w,
-            "image_grid_h": self.image_grid_h,
-            "image_decoder": self.image_decoder_tag,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.image_grid_w is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed image-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without image_grid_w — writes that skip "
-                    "the image_fps append would leave landed docs "
-                    "invisible to every later image history probe "
-                    "(silently missed cross-batch image duplicates); "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed image fingerprints were "
-                    f"derived with {landed}; fingerprints from different "
-                    "grids/decoders never match — use the landed "
-                    "geometry and decoder (or a fresh state)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_image_params.json",
-            mine if self.image_grid_w is not None else None,
-            validate,
-        )
-
-    def image_landed(self, spark) -> bool:
-        """True once an image batch has fully landed in ``image_fps``
-        — probed separately from ``exists()`` because the table only
-        exists for image-enabled states (and may be enabled later via
-        ``backfill_image_fps``)."""
-        self._recover_crashed_compact(spark, ("image_fps",))
-        return self._table_landed(spark, "image_fps")
-
-    def image_fps(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, dhash) perceptual-fingerprint history,
-        with the same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "image_fps", exclude_epoch, run_id)
-
-    def backfill_image_fps(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable image dedup on a state whose batches landed BEFORE
-        image support: derive and land ``image_fps`` from the
-        historical KEPT corpus, which the caller must supply with its
-        ``image_col`` (like ``backfill_embeddings`` — the state keeps
-        keys, not media bytes). OFFLINE op; crash-safe via the same
-        staging protocol (``__bf`` dir, rename commit; a retry clears
-        stale leftovers). Being ONE table, the between-renames crash
-        window of the embed backfill does not exist here — a landed
-        final dir means the backfill committed and the call is a
-        no-op via ``image_landed``."""
-        spark = kept.sparkSession
-        if self.image_grid_w is None:
-            raise ValueError(
-                "backfill_image_fps needs an image-enabled state — "
-                "construct CurationState with image_grid_w (and grid_h / "
-                "decoder) first"
-            )
-        self._sync_image_params(spark)
-        if self.image_landed(spark):
-            return
-        if self.image_col not in kept.columns:
-            raise ValueError(
-                "image-enabled CurationState needs the "
-                f"{self.image_col!r} binary column on the supplied "
-                f"historical corpus; got {kept.columns}"
-            )
-        rows = self._derive_image(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("image_fps")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(
-                f"backfill_image_fps: rename {staging} -> {final} failed"
-            )
-
-    def _sync_audio_params(self, spark) -> None:
-        """Mirror of _sync_image_params for the energy-contour
-        derivation: window count + decoder identity pinned in
-        ``_audio_params.json``."""
-        mine = {
-            "audio_n_windows": self.audio_n_windows,
-            "audio_decoder": self.audio_decoder_tag,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.audio_n_windows is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed audio-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without audio_n_windows — writes that "
-                    "skip the audio_fps append would leave landed docs "
-                    "invisible to every later audio history probe; "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed audio fingerprints were "
-                    f"derived with {landed}; fingerprints from different "
-                    "window counts/decoders never match — use the landed "
-                    "geometry and decoder (or a fresh state)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_audio_params.json",
-            mine if self.audio_n_windows is not None else None,
-            validate,
-        )
-
-    def audio_landed(self, spark) -> bool:
-        """True once an audio batch has fully landed in ``audio_fps``
-        — ``image_landed``'s mirror."""
-        self._recover_crashed_compact(spark, ("audio_fps",))
-        return self._table_landed(spark, "audio_fps")
-
-    def audio_fps(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, ahash) energy-contour history, with the
-        same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "audio_fps", exclude_epoch, run_id)
-
-    def backfill_audio_fps(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable audio dedup on a state whose batches landed before
-        audio support — ``backfill_image_fps``'s mirror (one table, so
-        a landed final dir means a committed backfill; the caller
-        supplies the historical kept corpus with its clip column)."""
-        spark = kept.sparkSession
-        if self.audio_n_windows is None:
-            raise ValueError(
-                "backfill_audio_fps needs an audio-enabled state — "
-                "construct CurationState with audio_n_windows (and the "
-                "decoder) first"
-            )
-        self._sync_audio_params(spark)
-        if self.audio_landed(spark):
-            return
-        if self.audio_col not in kept.columns:
-            raise ValueError(
-                "audio-enabled CurationState needs the "
-                f"{self.audio_col!r} binary column on the supplied "
-                f"historical corpus; got {kept.columns}"
-            )
-        rows = self._derive_audio(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("audio_fps")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(
-                f"backfill_audio_fps: rename {staging} -> {final} failed"
-            )
-
-    def _derive_audio(self, kept: DataFrame, id_col: str) -> DataFrame:
-        """(doc_id, ahash) rows for a kept batch — the same
-        ``_audio_sigs`` derivation the edge stages probe with."""
-        if self.audio_col not in kept.columns:
-            raise ValueError(
-                "audio-enabled CurationState needs the "
-                f"{self.audio_col!r} binary column on every kept batch; "
-                f"got {kept.columns}"
-            )
-        return _audio_sigs(
-            kept, id_col, self.audio_col, self.audio_n_windows,
-            self.audio_decode_fn,
-        )
-
-    def _sync_video_params(self, spark) -> None:
-        """Mirror of _sync_image_params for the frame-set derivation:
-        sampling interval, grid geometry and decoder identity pinned
-        in ``_video_params.json`` (frames sampled at a different
-        cadence or thumbnail grid can never match the landed ones)."""
-        mine = {
-            "video_every_ms": self.video_every_ms,
-            "video_grid_w": self.video_grid_w,
-            "video_grid_h": self.video_grid_h,
-            "video_decoder": self.video_decoder_tag,
-        }
-
-        def validate(landed: dict) -> None:
-            if self.video_every_ms is None:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) has landed video-"
-                    f"dedup state ({landed}) but this instance was "
-                    "constructed without video_every_ms — writes that "
-                    "skip the video_fps append would leave landed docs "
-                    "invisible to every later video history probe; "
-                    "construct with the landed geometry"
-                )
-            if landed != mine:
-                raise ValueError(
-                    f"CurationState({self.state_dir}) constructed with "
-                    f"{mine} but the landed video fingerprints were "
-                    f"derived with {landed}; frames sampled differently "
-                    "never match — use the landed geometry and decoder "
-                    "(or a fresh state)"
-                )
-
-        self._sync_manifest(
-            spark,
-            "_video_params.json",
-            mine if self.video_every_ms is not None else None,
-            validate,
-        )
-
-    def video_landed(self, spark) -> bool:
-        """True once a video batch has fully landed in ``video_fps``."""
-        self._recover_crashed_compact(spark, ("video_fps",))
-        return self._table_landed(spark, "video_fps")
-
-    def video_fps(
-        self, spark, exclude_epoch: int | None = None, run_id: str | None = None
-    ) -> DataFrame:
-        """The landed (doc_id, fhash) sampled-frame history, with the
-        same replayed-epoch exclusion as the doc tables."""
-        return self._read(spark, "video_fps", exclude_epoch, run_id)
-
-    def backfill_video_fps(
-        self, kept: DataFrame, id_col: str = "doc_id"
-    ) -> None:
-        """Enable video dedup on a state whose batches landed before
-        video support — ``backfill_image_fps``'s mirror; the caller
-        supplies the historical kept corpus with its clip AND duration
-        columns."""
-        spark = kept.sparkSession
-        if self.video_every_ms is None:
-            raise ValueError(
-                "backfill_video_fps needs a video-enabled state — "
-                "construct CurationState with video_every_ms (and the "
-                "grid/decoder) first"
-            )
-        self._sync_video_params(spark)
-        if self.video_landed(spark):
-            return
-        rows = self._derive_video(kept, id_col)
-        jvm, fs = self._fs(spark)
-        hp = jvm.org.apache.hadoop.fs.Path
-        final = self._path("video_fps")
-        staging = final + "__bf"
-        if fs.exists(hp(staging)):
-            fs.delete(hp(staging), True)  # crashed earlier attempt
-        rows.withColumns(
-            {"_epoch": F.lit(-1), "_run": F.lit("")}
-        ).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hp(staging), hp(final)):
-            raise IOError(
-                f"backfill_video_fps: rename {staging} -> {final} failed"
-            )
-
-    def _derive_video(self, kept: DataFrame, id_col: str) -> DataFrame:
-        """(doc_id, fhash) rows for a kept batch — the same
-        ``_video_sigs`` derivation the edge stages probe with (a
-        minimal cfg view carries the state's pinned geometry)."""
-        missing = [
-            c for c in (self.video_col, self.video_duration_col)
-            if c not in kept.columns
-        ]
+    def _derive_side(self, side: SideTable, kept: DataFrame, id_col: str) -> dict:
+        """{table: rows} of one side for a kept frame."""
+        cols = [getattr(self, a) for a in side.inputs]
+        missing = [c for c in cols if c not in kept.columns]
         if missing:
             raise ValueError(
-                "video-enabled CurationState needs the "
-                f"{self.video_col!r} (binary) and "
-                f"{self.video_duration_col!r} (BIGINT ms) columns on "
-                f"every kept batch; missing {missing} in {kept.columns}"
+                f"{side.name}-enabled CurationState needs the {cols} "
+                f"column(s) on every kept batch; missing {missing} in "
+                f"{kept.columns}"
             )
-        cfg_view = CurationConfig(
-            video_min_matching=1,
-            video_col=self.video_col,
-            video_duration_col=self.video_duration_col,
-            video_every_ms=self.video_every_ms,
-            video_grid_w=self.video_grid_w,
-            video_grid_h=self.video_grid_h,
-            video_decode_fn=self.video_decode_fn,
-        )
-        return _video_sigs(kept, id_col, cfg_view)
-
-    def _derive_image(self, kept: DataFrame, id_col: str) -> DataFrame:
-        """(doc_id, dhash) rows for a kept batch — the same
-        ``_image_sigs`` derivation the edge stages probe with, so
-        landed fingerprints always chunk-collide with a
-        matching-geometry probe's."""
-        if self.image_col not in kept.columns:
-            raise ValueError(
-                "image-enabled CurationState needs the "
-                f"{self.image_col!r} binary column on every kept batch; "
-                f"got {kept.columns}"
-            )
-        return _image_sigs(
-            kept,
-            id_col,
-            self.image_col,
-            self.image_grid_w,
-            self.image_grid_h,
-            self.image_decode_fn,
-        )
+        return side.derive(self, kept, id_col)
 
     def _derive(self, kept: DataFrame, text_col: str, id_col: str):
         from clickhouse_mysql_data_reader_spark.operators.dedup import (
@@ -2974,31 +2733,25 @@ class CurationState:
         # batch-local rarest-first ordering is exact for all later
         # probes (one-sided prefix theorem — see prefix_shingles)
         prefixes = prefix_shingles(sh, frac) if frac is not None else None
-        emb, srp = (
-            self._derive_embed(kept, id_col)
-            if self.embed_dim is not None
-            else (None, None)
-        )
-        return fp, sh, bands, prefixes, emb, srp
+        return fp, sh, bands, prefixes
 
     def write(self, kept: DataFrame, text_col: str = "text", id_col: str = "doc_id",
               mode: str = "append", epoch_id: int | None = None,
               run_id: str | None = None,
-              image_sigs: DataFrame | None = None,
-              audio_sigs: DataFrame | None = None,
-              video_sigs: DataFrame | None = None) -> DataFrame:
-        """Derive and append the three state tables for a kept batch;
-        returns the CHECKPOINTED ``kept`` — callers must act on the
-        returned frame, not the original lazy plan, whose state reads
-        are a stale snapshot once this append lands (a re-list under
-        stage retry or cache eviction would see this batch's own rows
-        and anti-join it to empty).
+              sigs: dict[str, DataFrame] | None = None) -> DataFrame:
+        """Derive and append the state tables for a kept batch (the
+        three doc tables, the prefixes and every enabled side's
+        tables); returns the CHECKPOINTED ``kept`` — callers must act
+        on the returned frame, not the original lazy plan, whose state
+        reads are a stale snapshot once this append lands (a re-list
+        under stage retry or cache eviction would see this batch's own
+        rows and anti-join it to empty).
 
         ``kept`` is materialized ONCE via ``localCheckpoint`` before
-        deriving: (a) the three writes then read the checkpointed
-        blocks instead of re-executing the caller's full curation plan
-        (gates + dedup + LSH) three times, and (b) — the critical part
-        — the writes are SELF-REFERENTIAL when ``kept`` came from
+        deriving: (a) the writes then read the checkpointed blocks
+        instead of re-executing the caller's full curation plan (gates
+        + dedup + LSH) per table, and (b) — the critical part — the
+        writes are SELF-REFERENTIAL when ``kept`` came from
         ``curate_increment`` (its lineage READS these state paths, and
         an append's per-task commits become visible mid-job, so an
         un-truncated plan can observe its own partial output: observed
@@ -3010,87 +2763,57 @@ class CurationState:
         during the write must be survivable — localCheckpoint blocks
         are executor-local.
 
-        Write order is fingerprints -> shingles -> bands on purpose,
-        but note what a mid-sequence crash actually orphans: rows in
-        the tables ALREADY written — i.e. a crash after the
-        fingerprints commit leaves docs with fingerprints but no
-        shingles/bands. Those orphans make the exact-dedup anti-join
+        ``sigs`` is the decode-once seam, keyed by side name: a caller
+        that already fingerprinted the batch for a single-table side
+        (curate_increment's probe stage — a checkpointed frame with NO
+        state read in its plan) hands the rows over and only the kept
+        subset lands; other enabled sides derive from the checkpointed
+        kept batch.
+
+        Write order is bloom -> side tables -> fingerprints -> shingles
+        -> bands -> prefixes on purpose (the bloom and side-table
+        invariants above), but note what a mid-sequence crash actually
+        orphans: rows in the tables ALREADY written — i.e. a crash
+        after the fingerprints commit leaves docs with fingerprints but
+        no shingles/bands. Those orphans make the exact-dedup anti-join
         STRICTER (the docs are known), never looser, so no duplicate is
         admitted — but a plain batch retry of that same batch
         (``epoch_id=None``) anti-joins against its own partial
-        fingerprint append and silently drops the whole batch. For
-        retryable batch appends, pass ``epoch_id``/``run_id`` (a batch
-        tag) so the replay can EXCLUDE its own crashed append's rows,
-        exactly as ``curate_stream`` does per epoch. ``exists``
-        additionally requires a committed write in all three dirs, so
-        a partial FIRST write reads as not-landed and the next attempt
-        bootstraps.
+        fingerprint (or side) append and silently drops the whole
+        batch. For retryable batch appends, pass ``epoch_id``/``run_id``
+        (a batch tag) so the replay can EXCLUDE its own crashed
+        append's rows, exactly as ``curate_stream`` does per epoch.
+        ``exists`` additionally requires a committed write in all three
+        doc dirs, so a partial FIRST write reads as not-landed and the
+        next attempt bootstraps.
         """
         from pyspark import StorageLevel
 
-        self.sync_params(kept.sparkSession)
-        self._sync_bloom_params(kept.sparkSession)
-        self._sync_prefix_params(kept.sparkSession)
-        self._sync_embed_params(kept.sparkSession)
-        self._sync_image_params(kept.sparkSession)
-        self._sync_audio_params(kept.sparkSession)
-        self._sync_video_params(kept.sparkSession)
-        if (
-            self.embed_dim is not None
-            and self.exists(kept.sparkSession)
-            and not self.embed_landed(kept.sparkSession)
-        ):
-            # an embed-enabled handle writing over a LEGACY embed-less
-            # state must backfill FIRST — the prefix argument above,
-            # but NOT auto-runnable here: unlike prefixes (derivable
-            # from the landed shingles) there is nothing on disk to
-            # derive vectors from, so the caller must supply the
-            # historical kept corpus. Appending only this batch would
-            # make embed_landed() true with older docs invisible to
-            # every semantic history probe (silently missed cross-batch
-            # semantic duplicates, not an error any join would surface).
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed srp_bands/embeddings — run "
-                "backfill_embeddings(historical_kept_corpus) once "
-                "(offline) before embed-enabled appends"
-            )
-        if (
-            self.image_grid_w is not None
-            and self.exists(kept.sparkSession)
-            and not self.image_landed(kept.sparkSession)
-        ):
-            # the embed argument verbatim: appending only this batch's
-            # fingerprints would make image_landed() true with older
-            # docs invisible to every image history probe
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed image_fps — run backfill_image_fps("
-                "historical_kept_corpus) once (offline) before "
-                "image-enabled appends"
-            )
-        if (
-            self.audio_n_windows is not None
-            and self.exists(kept.sparkSession)
-            and not self.audio_landed(kept.sparkSession)
-        ):
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed audio_fps — run backfill_audio_fps("
-                "historical_kept_corpus) once (offline) before "
-                "audio-enabled appends"
-            )
-        if (
-            self.video_every_ms is not None
-            and self.exists(kept.sparkSession)
-            and not self.video_landed(kept.sparkSession)
-        ):
-            raise ValueError(
-                f"CurationState({self.state_dir}) has landed batches but "
-                "no landed video_fps — run backfill_video_fps("
-                "historical_kept_corpus) once (offline) before "
-                "video-enabled appends"
-            )
+        spark = kept.sparkSession
+        sigs = sigs or {}
+        self.sync_params(spark)
+        self._sync_bloom_params(spark)
+        self._sync_prefix_params(spark)
+        for side in _SIDES:
+            self._sync_side_params(spark, side)
+        sides = [side for side in _SIDES if side.enabled(self)]
+        if sides and self.exists(spark):
+            for side in sides:
+                if not self.landed(spark, side):
+                    # a side-enabled handle writing over a state landed
+                    # without the side must backfill FIRST — the prefix
+                    # argument below, but NOT auto-runnable here: there
+                    # is nothing on disk to derive side rows from, so
+                    # the caller supplies the historical kept corpus.
+                    # Appending only this batch would make landed()
+                    # true with older docs invisible to every history
+                    # probe of the side.
+                    raise ValueError(
+                        f"CurationState({self.state_dir}) has landed "
+                        f"batches but no landed {'/'.join(side.tables)} — "
+                        f"run {side.backfill_call} once (offline) before "
+                        f"{side.name}-enabled appends"
+                    )
         if self._prefix_frac() is not None:
             # a prefix-enabled handle writing over a LEGACY prefix-less
             # state must backfill the landed history FIRST: appending
@@ -3098,27 +2821,19 @@ class CurationState:
             # true with older docs invisible to the landed-prefix probe
             # direction — silently missed cross-history duplicates
             # (no-op when prefixes already exist or nothing is landed)
-            self.ensure_prefixes(kept.sparkSession)
+            self.ensure_prefixes(spark)
         kept = kept.localCheckpoint()
         etag = F.lit(-1 if epoch_id is None else int(epoch_id)).alias("_epoch")
         rtag = F.lit(run_id or "").alias("_run")
-        fp, sh, bands, prefixes, emb, srp = self._derive(kept, text_col, id_col)
-        img = None
-        if self.image_grid_w is not None:
-            # ``image_sigs`` is the decode-once seam: a caller that
-            # already fingerprinted the batch (curate_increment's probe
-            # stage — a checkpointed frame with NO state read in its
-            # plan) hands the sigs over and only the kept subset lands;
-            # otherwise derive from the checkpointed kept batch.
-            img = (
-                image_sigs.join(
-                    kept.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                if image_sigs is not None
-                else self._derive_image(kept, id_col)
-            )
+        fp, sh, bands, prefixes = self._derive(kept, text_col, id_col)
+        ids = kept.select(F.col(id_col).alias("doc_id"))
+        side_rows: dict[str, DataFrame] = {}
+        for side in sides:
+            if sigs.get(side.name) is not None:
+                (table,) = side.tables  # the seam serves single-table sides
+                side_rows[table] = sigs[side.name].join(ids, "doc_id", "left_semi")
+            else:
+                side_rows.update(self._derive_side(side, kept, id_col))
         if self.bloom_bits is not None:
             # BEFORE the fingerprints append (see the bloom invariant
             # note above): a crash between bloom and fingerprints adds
@@ -3128,7 +2843,7 @@ class CurationState:
                 build_bloom,
             )
 
-            self.ensure_bloom(kept.sparkSession)
+            self.ensure_bloom(spark)
             batch_bits = build_bloom(fp, "fp", self.bloom_bits, self.bloom_hashes)
             # prior bits are OR-ed in for EVERY mode, overwrite included:
             # the bloom lands before the data, so during the crash window
@@ -3140,7 +2855,7 @@ class CurationState:
             # which the exact join removes. An overwrite that wants a
             # tight filter should delete the bloom file afterwards and
             # let ensure_bloom rebuild from the landed table.
-            prior = self.read_bloom(kept.sparkSession)
+            prior = self.read_bloom(spark)
             if prior is not None:
                 import numpy as _np
 
@@ -3148,63 +2863,12 @@ class CurationState:
                     _np.frombuffer(batch_bits, dtype=_np.uint8)
                     | _np.frombuffer(prior, dtype=_np.uint8)
                 )
-            self._write_bloom(kept.sparkSession, batch_bits)
-        if emb is not None:
-            # BEFORE the fingerprints append, like the bloom bits: a
-            # crash after these commits leaves embed rows for docs the
-            # doc tables never landed — semantic probes get STRICTER
-            # (extra candidates the exact-cosine verify still settles),
-            # never looser, whereas the reverse order would leave
-            # landed docs invisible to every later semantic history
-            # probe. A plain batch retry of a crash in this window sees
-            # its own partial embed append and drops the whole batch as
-            # self-dups — same documented remedy as fingerprints: pass
-            # (epoch_id, run_id) for retryable appends.
-            emb.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
+            self._write_bloom(spark, batch_bits)
+        for table, rows in side_rows.items():
+            # BEFORE the fingerprints append: the side-table invariant
+            rows.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
                 mode
-            ).parquet(self._path("embeddings"))
-            srp.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("srp_bands"))
-        aud = None
-        if self.audio_n_windows is not None:
-            aud = (
-                audio_sigs.join(
-                    kept.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                if audio_sigs is not None
-                else self._derive_audio(kept, id_col)
-            )
-        if img is not None:
-            # BEFORE the fingerprints append, the embed-tables argument
-            # verbatim: orphaned image fps make later probes STRICTER
-            # (extra candidates the exact Hamming verify settles), never
-            # looser; retryable appends pass (epoch_id, run_id)
-            img.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("image_fps"))
-        if aud is not None:
-            # same ordering argument as the image fps
-            aud.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("audio_fps"))
-        vid = None
-        if self.video_every_ms is not None:
-            vid = (
-                video_sigs.join(
-                    kept.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                if video_sigs is not None
-                else self._derive_video(kept, id_col)
-            )
-            # same ordering argument as the image/audio fps
-            vid.withColumns({"_epoch": etag, "_run": rtag}).write.mode(
-                mode
-            ).parquet(self._path("video_fps"))
+            ).parquet(self._path(table))
         sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             fp.withColumns({"_epoch": etag, "_run": rtag}).write.mode(mode).parquet(
@@ -3256,16 +2920,16 @@ class CurationState:
         delete(table__gc); no state is ever half-written, but a crash
         BETWEEN the two renames leaves the table dir missing with
         ``__gc`` holding the only copy — every entry point
-        (``exists``/``_read``/``compact``) first rolls that back via
+        (``exists``/``read``/``compact``) first rolls that back via
         ``_recover_crashed_compact``, so the next read or compact sees
         the original table again. A ``__tmp`` leftover is always
         deletable (the pre-rename copy is still live); ``__gc`` is
         deleted only when the table dir exists (i.e. the swap
         completed and only the final delete was lost).
 
-        Also drops the mergeSchema cost from ``_read``: compacted files
+        Also drops the mergeSchema cost from ``read``: compacted files
         are schema-homogeneous (tags present everywhere), recorded with
-        a ``_tags_homogeneous`` marker that ``_read`` checks —
+        a ``_tags_homogeneous`` marker that ``read`` checks —
         subsequent ``write()`` appends always carry the tag columns, so
         homogeneity persists once established.
 
@@ -3321,13 +2985,17 @@ class CurationState:
             }
         return report
 
-    def _read(
+    def read(
         self,
         spark,
         name: str,
-        exclude_epoch: int | None,
-        run_id: str | None,
+        exclude_epoch: int | None = None,
+        run_id: str | None = None,
     ) -> DataFrame:
+        """One landed state table (any of ``_TABLES``) without its tag
+        columns; ``(exclude_epoch, run_id)`` drops that epoch's own
+        appends, so a replayed epoch sees exactly the pre-epoch
+        history."""
         # mergeSchema: a dir can mix tag-bearing files with files from
         # an older layout; without it the picked footer decides whether
         # the tag columns even surface. Post-compact the dir is marked
@@ -3359,17 +3027,17 @@ class CurationState:
     def fingerprints(
         self, spark, exclude_epoch: int | None = None, run_id: str | None = None
     ) -> DataFrame:
-        return self._read(spark, "fingerprints", exclude_epoch, run_id)
+        return self.read(spark, "fingerprints", exclude_epoch, run_id)
 
     def shingles(
         self, spark, exclude_epoch: int | None = None, run_id: str | None = None
     ) -> DataFrame:
-        return self._read(spark, "shingles", exclude_epoch, run_id)
+        return self.read(spark, "shingles", exclude_epoch, run_id)
 
     def bands(
         self, spark, exclude_epoch: int | None = None, run_id: str | None = None
     ) -> DataFrame:
-        return self._read(spark, "bands", exclude_epoch, run_id)
+        return self.read(spark, "bands", exclude_epoch, run_id)
 
     def growth_report(self, spark) -> dict:
         """Per-table state-growth report: {table: {rows, docs?,
@@ -3383,11 +3051,13 @@ class CurationState:
         them); filesystem size via one ContentSummary call per table.
         """
         jvm, fs = self._fs(spark)
+        # crash-window rollback FIRST: a table compact() left under
+        # __gc probes as not landed and would drop out of the report
+        self._recover_crashed_compact(spark)
         report: dict = {}
         for name in self._TABLES:
             if not self._table_landed(spark, name):
                 continue
-            self._recover_crashed_compact(spark, (name,))
             cs = fs.getContentSummary(
                 jvm.org.apache.hadoop.fs.Path(self._path(name))
             )
@@ -3444,23 +3114,25 @@ class CurationState:
                 ).alias("dup_rate"),
             )
 
+        # crash-window rollback FIRST (see growth_report)
+        self._recover_crashed_compact(spark)
         flat = (
-            ("text", "fingerprints", self.fingerprints, "fp"),
-            ("image", "image_fps", self.image_fps, "dhash"),
-            ("audio", "audio_fps", self.audio_fps, "ahash"),
+            ("text", "fingerprints", "fp"),
+            ("image", "image_fps", "dhash"),
+            ("audio", "audio_fps", "ahash"),
         )
-        for modality, table, reader, col in flat:
+        for modality, table, col in flat:
             if not self._table_landed(spark, table):
                 continue
             keyed = (
-                reader(spark)
+                self.read(spark, table)
                 .select("doc_id", F.col(col).alias("_k"))
                 .dropDuplicates(["doc_id", "_k"])
             )
             parts.append(_rate_row(keyed, modality))
         if self._table_landed(spark, "video_fps"):
             fset = (
-                self.video_fps(spark)
+                self.read(spark, "video_fps")
                 .select("doc_id", "fhash")
                 .dropDuplicates(["doc_id", "fhash"])
             )
@@ -3635,128 +3307,39 @@ def curate_increment(
             "(on an already-landed pre-prefix state, run "
             "state.ensure_prefixes(spark) once to backfill)"
         )
-    if cfg.embed_near_cos is not None:
-        # geometry mismatch is the minhash_k argument again: SRP band
-        # values derived with a different (dim, bits, bands, seed) can
-        # never collide with the landed ones, so cross-history semantic
-        # detection would silently find nothing. embed_col must match
-        # too — write() derives the state tables from the state's name.
-        mine = (cfg.embed_dim, cfg.embed_bits, cfg.embed_srp_bands,
-                cfg.embed_seed, cfg.embed_col)
-        theirs = (state.embed_dim, state.embed_bits, state.embed_srp_bands,
-                  state.embed_seed, state.embed_col)
-        if state.embed_dim is None or mine != theirs:
+    for side in _SIDES:
+        flag = getattr(cfg, side.cfg_enable)
+        if flag is None:
+            continue
+        # geometry mismatch is the minhash_k argument again: side rows
+        # derived with other parameters or another decoder can never
+        # match the landed ones, so the side's cross-history probe
+        # would silently find nothing. The input column names must
+        # match too — write() derives the state tables from the
+        # state's names.
+        fields = [f for f, _ in side.cfg_match]
+        mine = [getattr(cfg, f) for f in fields]
+        theirs = [getattr(state, a) for _, a in side.cfg_match]
+        if side.decoder is not None:
+            fn, tag = side.decoder
+            fields.append(tag)
+            mine.append(_decoder_tag(getattr(cfg, fn), getattr(cfg, tag)))
+            theirs.append(getattr(state, tag))
+        if not side.enabled(state) or mine != theirs:
             raise ValueError(
-                f"embed_near_cos={cfg.embed_near_cos} needs an embed-"
-                "enabled CurationState matching the cfg's SRP geometry: "
-                f"cfg has (dim, bits, bands, seed, col)={mine} but the "
-                f"state was constructed with {theirs}; band values "
-                "derived with different geometries never collide "
-                "(silently missed semantic duplicates)"
+                f"{side.cfg_enable}={flag} needs a {side.name}-enabled "
+                "CurationState matching the cfg's geometry: cfg has "
+                f"({', '.join(fields)})={tuple(mine)} but the state was "
+                f"constructed with {tuple(theirs)}; rows derived with "
+                "another geometry or decoder never match (silently missed "
+                f"{side.name} duplicates)"
             )
-        if cfg.embed_col not in new_docs.columns:
+        cols = [getattr(cfg, c) for c in side.inputs]
+        missing = [c for c in cols if c not in new_docs.columns]
+        if missing:
             raise ValueError(
-                f"embed_near_cos={cfg.embed_near_cos} needs an "
-                f"{cfg.embed_col!r} column (array<float/double>, length "
-                f"{cfg.embed_dim}) on the batch; got {new_docs.columns}"
-            )
-    if cfg.image_near_hamming is not None:
-        # the embed-geometry argument on the image modality:
-        # fingerprints derived with a different grid or decoder can
-        # never match the landed ones, so cross-history image dedup
-        # would silently find nothing
-        mine_img = (
-            cfg.image_grid_w,
-            cfg.image_grid_h,
-            cfg.image_col,
-            _decoder_tag(cfg.image_decode_fn, cfg.image_decoder_tag),
-        )
-        theirs_img = (
-            state.image_grid_w,
-            state.image_grid_h,
-            state.image_col,
-            state.image_decoder_tag,
-        )
-        if state.image_grid_w is None or mine_img != theirs_img:
-            raise ValueError(
-                f"image_near_hamming={cfg.image_near_hamming} needs an "
-                "image-enabled CurationState matching the cfg's dHash "
-                "geometry: cfg has (grid_w, grid_h, col, decoder)="
-                f"{mine_img} but the state was constructed with "
-                f"{theirs_img}; fingerprints from different grids/"
-                "decoders never match (silently missed image duplicates)"
-            )
-        if cfg.image_col not in new_docs.columns:
-            raise ValueError(
-                f"image_near_hamming={cfg.image_near_hamming} needs an "
-                f"{cfg.image_col!r} binary column on the batch; got "
-                f"{new_docs.columns}"
-            )
-    if cfg.audio_near_hamming is not None:
-        # the image-geometry argument on the audio modality
-        mine_aud = (
-            cfg.audio_n_windows,
-            cfg.audio_col,
-            _decoder_tag(cfg.audio_decode_fn, cfg.audio_decoder_tag),
-        )
-        theirs_aud = (
-            state.audio_n_windows,
-            state.audio_col,
-            state.audio_decoder_tag,
-        )
-        if state.audio_n_windows is None or mine_aud != theirs_aud:
-            raise ValueError(
-                f"audio_near_hamming={cfg.audio_near_hamming} needs an "
-                "audio-enabled CurationState matching the cfg's "
-                "energy-hash geometry: cfg has (n_windows, col, decoder)="
-                f"{mine_aud} but the state was constructed with "
-                f"{theirs_aud}; fingerprints from different window "
-                "counts/decoders never match (silently missed audio "
-                "duplicates)"
-            )
-        if cfg.audio_col not in new_docs.columns:
-            raise ValueError(
-                f"audio_near_hamming={cfg.audio_near_hamming} needs an "
-                f"{cfg.audio_col!r} binary column on the batch; got "
-                f"{new_docs.columns}"
-            )
-    if cfg.video_min_matching is not None:
-        mine_vid = (
-            cfg.video_every_ms,
-            cfg.video_grid_w,
-            cfg.video_grid_h,
-            cfg.video_col,
-            cfg.video_duration_col,
-            _decoder_tag(cfg.video_decode_fn, cfg.video_decoder_tag),
-        )
-        theirs_vid = (
-            state.video_every_ms,
-            state.video_grid_w,
-            state.video_grid_h,
-            state.video_col,
-            state.video_duration_col,
-            state.video_decoder_tag,
-        )
-        if state.video_every_ms is None or mine_vid != theirs_vid:
-            raise ValueError(
-                f"video_min_matching={cfg.video_min_matching} needs a "
-                "video-enabled CurationState matching the cfg's frame "
-                "geometry: cfg has (every_ms, grid_w, grid_h, col, "
-                f"dur_col, decoder)={mine_vid} but the state was "
-                f"constructed with {theirs_vid}; frames sampled "
-                "differently never match (silently missed video "
-                "duplicates)"
-            )
-        missing_vid = [
-            c for c in (cfg.video_col, cfg.video_duration_col)
-            if c not in new_docs.columns
-        ]
-        if missing_vid:
-            raise ValueError(
-                f"video_min_matching={cfg.video_min_matching} needs "
-                f"{cfg.video_col!r} (binary) and "
-                f"{cfg.video_duration_col!r} (BIGINT ms) columns on the "
-                f"batch; missing {missing_vid} in {new_docs.columns}"
+                f"{side.cfg_enable}={flag} needs the {cols} column(s) on "
+                f"the batch; missing {missing} in {new_docs.columns}"
             )
     spark = new_docs.sparkSession
     if state.exists(spark):
@@ -3775,46 +3358,18 @@ def curate_increment(
                 "rarest-sort pass over the landed shingles) to backfill, "
                 "then increments maintain it per batch"
             )
-        if cfg.embed_near_cos is not None:
-            state._sync_embed_params(spark)
-            if not state.embed_landed(spark):
+        for side in _SIDES:
+            if getattr(cfg, side.cfg_enable) is None:
+                continue
+            state._sync_side_params(spark, side)
+            if not state.landed(spark, side):
                 raise ValueError(
-                    "semantic near-dup vs history needs the landed "
-                    "srp_bands/embeddings tables, which this state has "
-                    "not written — run state.backfill_embeddings("
-                    "historical_kept_corpus) once (offline; the caller "
-                    "supplies the kept corpus with its vector column — "
-                    "the state keeps keys, not content), then increments "
-                    "maintain them per batch"
-                )
-        if cfg.image_near_hamming is not None:
-            state._sync_image_params(spark)
-            if not state.image_landed(spark):
-                raise ValueError(
-                    "image near-dup vs history needs the landed "
-                    "image_fps table, which this state has not written — "
-                    "run state.backfill_image_fps(historical_kept_corpus) "
+                    f"{side.name} near-dup vs history needs the landed "
+                    f"{'/'.join(side.tables)} table(s), which this state "
+                    f"has not written — run state.{side.backfill_call} "
                     "once (offline; the caller supplies the kept corpus "
-                    "with its image column — the state keeps keys, not "
-                    "media bytes), then increments maintain it per batch"
-                )
-        if cfg.audio_near_hamming is not None:
-            state._sync_audio_params(spark)
-            if not state.audio_landed(spark):
-                raise ValueError(
-                    "audio near-dup vs history needs the landed "
-                    "audio_fps table, which this state has not written — "
-                    "run state.backfill_audio_fps(historical_kept_corpus) "
-                    "once (offline), then increments maintain it per batch"
-                )
-        if cfg.video_min_matching is not None:
-            state._sync_video_params(spark)
-            if not state.video_landed(spark):
-                raise ValueError(
-                    "video near-dup vs history needs the landed "
-                    "video_fps table, which this state has not written — "
-                    "run state.backfill_video_fps(historical_kept_corpus) "
-                    "once (offline), then increments maintain it per batch"
+                    "with its input columns — the state keeps keys, not "
+                    "content), then increments maintain them per batch"
                 )
 
     # --- stage 0 (optional): incremental corpus-level line dedup ------
@@ -3995,7 +3550,7 @@ def curate_increment(
             # fourth (image) edge type, same union as batch curate();
             # localCheckpoint so the decode runs once (the self-join
             # consumes both sides AND the state write lands the kept
-            # subset through the image_sigs seam)
+            # subset through the ``sigs`` seam)
             sigs_img0 = _image_sigs(
                 boiled0, id_col, cfg.image_col, cfg.image_grid_w,
                 cfg.image_grid_h, cfg.image_decode_fn,
@@ -4027,8 +3582,8 @@ def curate_increment(
         if update_state:
             kept = state.write(kept, text_col=text_col, id_col=id_col,
                                mode="append", epoch_id=epoch_id, run_id=run_id,
-                               image_sigs=sigs_img0, audio_sigs=sigs_aud0,
-                               video_sigs=fset_vid0)
+                               sigs={"image": sigs_img0, "audio": sigs_aud0,
+                                     "video": fset_vid0})
         _land_line_fps()
         _land_splits(kept, comps0)
         return kept
@@ -4246,7 +3801,9 @@ def curate_increment(
             hot = None
             if cfg.video_max_frame_df is not None:
                 hist_v = (
-                    state.video_fps(spark, exclude_epoch=epoch_id, run_id=run_id)
+                    state.read(
+                        spark, "video_fps", exclude_epoch=epoch_id, run_id=run_id
+                    )
                     .select("doc_id", "fhash")
                     .dropDuplicates(["doc_id", "fhash"])
                 )
@@ -4390,7 +3947,7 @@ def curate_increment(
         # VECTORS, semi-join-cut to candidate docs first (the sh_hist
         # pattern above; the full vector history is never shuffled).
         # History always wins: the NEW doc drops.
-        hist_srp = state.srp_bands(spark, exclude_epoch=epoch_id, run_id=run_id)
+        hist_srp = state.read(spark, "srp_bands", exclude_epoch=epoch_id, run_id=run_id)
         sem_cands = (
             bands_new_srp.alias("n")
             .join(
@@ -4404,7 +3961,7 @@ def curate_increment(
             .distinct()
         )
         hist_vecs = (
-            state.embeddings(spark, exclude_epoch=epoch_id, run_id=run_id)
+            state.read(spark, "embeddings", exclude_epoch=epoch_id, run_id=run_id)
             .join(
                 sem_cands.select(F.col("doc_b").alias("doc_id")).distinct(),
                 "doc_id",
@@ -4437,7 +3994,7 @@ def curate_increment(
 
         img_pairs = simhash_near_pairs_cross(
             sigs_img_new,
-            state.image_fps(spark, exclude_epoch=epoch_id, run_id=run_id),
+            state.read(spark, "image_fps", exclude_epoch=epoch_id, run_id=run_id),
             bits=cfg.image_grid_h * (cfg.image_grid_w - 1),
             hamming_max=cfg.image_near_hamming,
             id_col="doc_id",
@@ -4456,7 +4013,7 @@ def curate_increment(
 
         aud_pairs = simhash_near_pairs_cross(
             sigs_aud_new,
-            state.audio_fps(spark, exclude_epoch=epoch_id, run_id=run_id),
+            state.read(spark, "audio_fps", exclude_epoch=epoch_id, run_id=run_id),
             bits=cfg.audio_n_windows - 1,
             hamming_max=cfg.audio_near_hamming,
             id_col="doc_id",
@@ -4473,7 +4030,7 @@ def curate_increment(
         drop_hist = drop_hist.unionByName(
             _video_hist_drop(
                 fset_vid_new,
-                state.video_fps(spark, exclude_epoch=epoch_id, run_id=run_id),
+                state.read(spark, "video_fps", exclude_epoch=epoch_id, run_id=run_id),
                 cfg,
                 hot=hot_vid,
             ).select(F.col("doc_a").alias(id_col))
@@ -4515,8 +4072,8 @@ def curate_increment(
         # result cannot re-read the state this call just appended to
         kept = state.write(kept, text_col=text_col, id_col=id_col,
                            mode="append", epoch_id=epoch_id, run_id=run_id,
-                           image_sigs=sigs_img_new, audio_sigs=sigs_aud_new,
-                           video_sigs=fset_vid_new)
+                           sigs={"image": sigs_img_new, "audio": sigs_aud_new,
+                                 "video": fset_vid_new})
     _land_line_fps()
     _land_splits(kept, comps)
     return kept
@@ -4681,7 +4238,7 @@ def curation_epoch_apply(
         # so no writer is active here. A crash between compact()'s two
         # renames leaves the table only under __gc; the replayed
         # epoch's first state READ rolls it back
-        # (_recover_crashed_compact runs on every exists/_read/compact
+        # (_recover_crashed_compact runs on every exists/read/compact
         # entry), then the replay re-appends + re-compacts normally.
         # (epoch + 1) so compact_every=N fires after epochs N-1,
         # 2N-1, ... — i.e. every N epochs counting from the first.

@@ -44,8 +44,8 @@ def _self_contained_pickle() -> None:
 
 
 def _newest_row(pdfs: Iterable[pd.DataFrame], vcol: str) -> pd.DataFrame | None:
-    """The shared selection kernel of both latest-wins operators: the
-    single newest row across an iterable of pandas chunks. Ties within
+    """The selection kernel of ``stateful_latest_wins``: the single
+    newest row across an iterable of pandas chunks. Ties within
     a chunk -> LAST occurrence (binlog order within a batch, mirroring
     the reference's strictly-ordered replay, mysqlreader.py:362-448);
     ties ACROSS chunks -> the later chunk (>= comparison), same rule.
@@ -93,92 +93,6 @@ def stateful_latest_wins(
 
     return changes.groupBy(*key_cols).applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def _make_latest_wins_processor(vcol: str):
-    """Build the ``StatefulProcessor`` class for ``_LatestWins`` at
-    module level (not closed over inside ``stateful_latest_wins_tws``)
-    so its logic is directly drivable in unit tests with a stubbed
-    handle/ValueState — no protobuf or streaming query needed to cover
-    the selection + compare-and-update path. ``StatefulProcessor``
-    itself imports without protobuf; only the live JVM<->Python state
-    protocol needs it."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _LatestWins(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._max_ver = handle.getValueState("max_ver", "max_ver long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            best = _newest_row(rows, vcol)
-            if best is not None:
-                ver = int(best[vcol].iloc[0])
-                prev = self._max_ver.get() if self._max_ver.exists() else None
-                if prev is None or ver > prev[0]:
-                    self._max_ver.update((ver,))
-                    yield best
-
-        def close(self) -> None:
-            pass
-
-    return _LatestWins
-
-
-def stateful_latest_wins_tws(
-    changes: DataFrame,
-    key_cols: list[str],
-    version_col: str,
-    output_schema: T.StructType | str | None = None,
-) -> DataFrame:
-    """``stateful_latest_wins`` on the ``transformWithStateInPandas``
-    API (Spark 4's successor to ``applyInPandasWithState``): identical
-    last-write-wins contract, expressed as a ``StatefulProcessor`` with
-    one named ``ValueState`` per key.
-
-    Why both exist: the legacy operator is battle-tested and its API is
-    frozen; the processor form is where new state features land
-    (multiple named state variables, TTL, timers in event OR processing
-    time, and state schema evolution) — a real CDC deployment that
-    needs, say, per-key TTL to bound state on churning keys should
-    start here. Semantics and per-key state size (one long) are
-    identical, so the two are drop-in interchangeable and the tests
-    assert the same contract over both.
-
-    Runtime requirement: transformWithState's state protocol speaks
-    protobuf between the JVM and the Python worker, so ``protobuf``
-    must be importable on driver AND workers (the legacy operator has
-    no such dependency). Checked eagerly here — without it the query
-    dies at start with an opaque 'driver worker crashed'.
-
-    (Install retried 2026-08-16, ROUND 14 of the build — and rounds
-    9-13 before it: ``pip install protobuf`` still fails — the index
-    resolves no distribution ("No matching distribution found"; no
-    network route), so the streaming integration test remains
-    environment-gated; the processor logic itself is executed in CI
-    via a stubbed ValueState handle, tests/test_stateful.py.)
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "stateful_latest_wins_tws requires the 'protobuf' package "
-            "(transformWithState's JVM<->Python state protocol); it is "
-            "not importable here — use stateful_latest_wins (identical "
-            "contract, no protobuf dependency) or install protobuf"
-        ) from e
-
-    _self_contained_pickle()
-    out_schema = output_schema or changes.schema
-
-    return changes.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_make_latest_wins_processor(version_col)(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -81,13 +81,6 @@ class TransformRegistry:
         return df
 
 
-def parse_date_column(df: DataFrame, col: str, fmt: str = "yyyy-MM-dd") -> DataFrame:
-    """The reference's example custom converter parses a `day` string to
-    date via strptime (clickhouse_mysql_converter/chwritedataconverter.py:7-15);
-    native equivalent."""
-    return df.withColumn(col, F.to_date(F.col(col), fmt))
-
-
 def _merge_json_types(a, b):
     """Widen two inferred Spark types to the narrowest common one.
     Conflicting shapes degrade to string — the reference's own move for

@@ -119,8 +119,8 @@ def test_curate_increment_audio_bootstrap_and_vs_history(spark, tmp_path):
     state = _astate(tmp_path)
     kept1 = {r["doc_id"] for r in curate_increment(b1, state, cfg=cfg).collect()}
     assert kept1 == {1, 3}
-    assert state.audio_landed(spark)
-    fps = {r["doc_id"] for r in state.audio_fps(spark).select("doc_id").collect()}
+    assert state.landed(spark, "audio")
+    fps = {r["doc_id"] for r in state.read(spark, "audio_fps").select("doc_id").collect()}
     assert fps == {1, 3}
     kept2 = {r["doc_id"] for r in curate_increment(b2, state, cfg=cfg).collect()}
     assert kept2 == {11}, "audio dup of landed doc must drop"
@@ -149,9 +149,9 @@ def test_curate_increment_audio_state_validation(spark, tmp_path):
         b1, plain, cfg=CurationConfig(near_dup_jaccard=0.9)
     ).localCheckpoint()
     upgraded = CurationState(legacy, audio_n_windows=49)
-    with pytest.raises(ValueError, match="backfill_audio_fps"):
+    with pytest.raises(ValueError, match=r"backfill\('audio'"):
         curate_increment(b2, upgraded, cfg=cfg)
-    upgraded.backfill_audio_fps(kept_hist)
+    upgraded.backfill("audio", kept_hist)
     kept2 = {r["doc_id"] for r in curate_increment(b2, upgraded, cfg=cfg).collect()}
     assert kept2 == set()
 
@@ -200,7 +200,7 @@ def test_audio_and_image_edges_compose(spark, tmp_path):
     state = CurationState.from_config(cfg, f"{tmp_path}/both")
     inc_kept = {r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()}
     assert inc_kept == {1}
-    assert state.image_landed(spark) and state.audio_landed(spark)
-    img_fps = {r["doc_id"] for r in state.image_fps(spark).collect()}
-    aud_fps = {r["doc_id"] for r in state.audio_fps(spark).collect()}
+    assert state.landed(spark, "image") and state.landed(spark, "audio")
+    img_fps = {r["doc_id"] for r in state.read(spark, "image_fps").collect()}
+    aud_fps = {r["doc_id"] for r in state.read(spark, "audio_fps").collect()}
     assert img_fps == {1} and aud_fps == set()  # kept doc 1 has image, no audio

@@ -942,8 +942,8 @@ def test_cli_curate_data_audio_edge_json(spark, tmp_path, capsys):
     kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert kept == {1, 3}  # audio near-twin 2 merged into 1, min_id keeps
     state = CurationState(state_dir, audio_n_windows=49)
-    assert state.audio_landed(spark)
-    fps = {r["doc_id"] for r in state.audio_fps(spark).collect()}
+    assert state.landed(spark, "audio")
+    fps = {r["doc_id"] for r in state.read(spark, "audio_fps").collect()}
     assert fps == {1}  # only the clip-bearing keeper has a fingerprint
 
 
@@ -994,10 +994,10 @@ def test_cli_curate_data_video_edge_json(spark, tmp_path, capsys):
     kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert kept == {1, 3}  # 2 shares 2 of 3 frames with 1 -> merged
     state = CurationState(state_dir, video_every_ms=1000)
-    assert state.video_landed(spark)
+    assert state.landed(spark, "video")
     per_doc = {
         r["doc_id"]: r["count"]
-        for r in state.video_fps(spark).groupBy("doc_id").count().collect()
+        for r in state.read(spark, "video_fps").groupBy("doc_id").count().collect()
     }
     assert per_doc == {1: 3}  # the keeper's 3 distinct frame hashes
 

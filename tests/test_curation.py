@@ -1513,6 +1513,18 @@ def test_compact_crash_between_renames_recovers(spark, tmp_path):
 
     # crash window: first rename done, second never happened
     fp_dir = str(tmp_path / "state" / "fingerprints")
+
+    # growth_report recovers instead of leaving the table out
+    shutil.move(fp_dir, fp_dir + "__gc")
+    assert state.growth_report(spark)["fingerprints"]["docs"] == 1
+    assert os.path.exists(fp_dir) and not os.path.exists(fp_dir + "__gc")
+
+    # so does media_dup_rate_report (its "text" row reads fingerprints)
+    shutil.move(fp_dir, fp_dir + "__gc")
+    rates = {r["modality"]: r["n_docs"] for r in state.media_dup_rate_report(spark).collect()}
+    assert rates == {"text": 1}
+    assert os.path.exists(fp_dir) and not os.path.exists(fp_dir + "__gc")
+
     shutil.move(fp_dir, fp_dir + "__gc")
     assert not os.path.exists(fp_dir)
 

@@ -172,9 +172,9 @@ def test_curate_increment_image_bootstrap_parity_and_state(spark, tmp_path):
     inc_kept = {r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()}
     assert inc_kept == batch_kept == {1, 3, 4}
 
-    assert state.image_landed(spark)
+    assert state.landed(spark, "image")
     fps_docs = {
-        r["doc_id"] for r in state.image_fps(spark).select("doc_id").collect()
+        r["doc_id"] for r in state.read(spark, "image_fps").select("doc_id").collect()
     }
     assert fps_docs == {1, 3}  # kept AND image-bearing (4 has no image)
 
@@ -202,7 +202,7 @@ def test_curate_increment_image_vs_history(spark, tmp_path):
     kept2 = {r["doc_id"] for r in curate_increment(b2, state, cfg=cfg).collect()}
     assert kept2 == {11, 12}, "image dup of landed doc must drop"
     fps_docs = {
-        r["doc_id"] for r in state.image_fps(spark).select("doc_id").collect()
+        r["doc_id"] for r in state.read(spark, "image_fps").select("doc_id").collect()
     }
     assert fps_docs == {1, 3, 12}
 
@@ -220,7 +220,7 @@ def test_curate_increment_image_vs_history(spark, tmp_path):
 def test_curate_increment_image_state_validation(spark, tmp_path):
     """Guard rails: cfg with image_near_hamming needs an image-enabled
     state with the same grid AND decoder tag; an image-enabled handle
-    over a legacy landed state demands backfill_image_fps, which then
+    over a legacy landed state demands backfill("image", ...), which then
     makes the cross-history probe fire; a mismatched reconstruction is
     rejected by the on-disk manifest."""
     cfg = _cfg()
@@ -249,9 +249,9 @@ def test_curate_increment_image_state_validation(spark, tmp_path):
         b1, plain, cfg=CurationConfig(near_dup_jaccard=0.9)
     ).localCheckpoint()
     upgraded = CurationState(legacy_dir, image_grid_w=7)
-    with pytest.raises(ValueError, match="backfill_image_fps"):
+    with pytest.raises(ValueError, match=r"backfill\('image'"):
         curate_increment(b2, upgraded, cfg=cfg)
-    upgraded.backfill_image_fps(kept_hist)
+    upgraded.backfill("image", kept_hist)
     kept2 = {r["doc_id"] for r in curate_increment(b2, upgraded, cfg=cfg).collect()}
     assert kept2 == set()
     # a handle reconstructed with a different grid is rejected by the

@@ -168,15 +168,15 @@ def test_curate_increment_semantic_bootstrap_parity_and_state(spark, tmp_path):
     inc_kept = {r["doc_id"] for r in curate_increment(docs, state, cfg=cfg).collect()}
     assert inc_kept == batch_kept == {1, 3, 4}
 
-    assert state.embed_landed(spark)
-    emb_docs = {r["doc_id"] for r in state.embeddings(spark).select("doc_id").collect()}
+    assert state.landed(spark, "embed")
+    emb_docs = {r["doc_id"] for r in state.read(spark, "embeddings").select("doc_id").collect()}
     srp_docs = {
-        r["doc_id"] for r in state.srp_bands(spark).select("doc_id").distinct().collect()
+        r["doc_id"] for r in state.read(spark, "srp_bands").select("doc_id").distinct().collect()
     }
     assert emb_docs == srp_docs == {1, 3, 4}
     # each landed doc occupies exactly n_bands buckets
     per_doc = (
-        state.srp_bands(spark).groupBy("doc_id").count().collect()
+        state.read(spark, "srp_bands").groupBy("doc_id").count().collect()
     )
     assert {r["count"] for r in per_doc} == {4}
 
@@ -204,7 +204,7 @@ def test_curate_increment_semantic_vs_history(spark, tmp_path):
     kept2 = {r["doc_id"] for r in curate_increment(b2, state, cfg=cfg).collect()}
     assert kept2 == {11, 12}, "semantic dup of landed doc must drop"
     # the kept batch-2 docs landed their embed rows too
-    emb_docs = {r["doc_id"] for r in state.embeddings(spark).select("doc_id").collect()}
+    emb_docs = {r["doc_id"] for r in state.read(spark, "embeddings").select("doc_id").collect()}
     assert emb_docs == {1, 3, 11, 12}
 
     # control: knob off -> the paraphrase survives (and no embed state
@@ -223,7 +223,7 @@ def test_curate_increment_semantic_vs_history(spark, tmp_path):
 def test_curate_increment_semantic_state_validation(spark, tmp_path):
     """The guard rails: cfg with embed_near_cos needs an embed-enabled
     state with the SAME geometry; an embed-enabled handle over a legacy
-    (embed-less) landed state demands backfill_embeddings, which then
+    (embed-less) landed state demands backfill("embed", ...), which then
     makes the cross-history probe work; the geometry manifest rejects a
     mismatched reconstruction."""
     cfg = _cfg()
@@ -252,10 +252,10 @@ def test_curate_increment_semantic_state_validation(spark, tmp_path):
     )
     kept_hist = kept_hist.localCheckpoint()
     upgraded = CurationState(legacy_dir, **_GEO)
-    with pytest.raises(ValueError, match="backfill_embeddings"):
+    with pytest.raises(ValueError, match=r"backfill\('embed'"):
         curate_increment(b2, upgraded, cfg=cfg)
     # backfill from the historical kept corpus, then the probe works
-    upgraded.backfill_embeddings(kept_hist)
+    upgraded.backfill("embed", kept_hist)
     kept2 = {r["doc_id"] for r in curate_increment(b2, upgraded, cfg=cfg).collect()}
     assert kept2 == set()
     # a handle reconstructed with a different geometry is rejected by
@@ -364,25 +364,25 @@ def test_backfill_embeddings_retry_guard(spark, tmp_path):
                      cfg=CurationConfig(near_dup_jaccard=0.9))
 
     upgraded = CurationState(legacy_dir, **_GEO)
-    upgraded.backfill_embeddings(hist)
+    upgraded.backfill("embed", hist)
     # simulate the mid-sequence crash: srp_bands (the SECOND rename)
     # never landed, embeddings did
     import shutil
 
     shutil.rmtree(f"{legacy_dir}/srp_bands")
-    assert not upgraded.embed_landed(spark)
+    assert not upgraded.landed(spark, "embed")
 
     # retry with a DIFFERENT corpus: refused before anything is deleted
     other = _mk(spark, [(9, "web", _T_D, _V_D)])
     with pytest.raises(ValueError, match="same historical corpus|SAME historical"):
-        CurationState(legacy_dir, **_GEO).backfill_embeddings(other)
+        CurationState(legacy_dir, **_GEO).backfill("embed", other)
     # the landed table survived the refused retry
     assert {r["doc_id"] for r in spark.read.parquet(
         f"{legacy_dir}/embeddings").collect()} == {1, 2}
 
     # retry with the SAME corpus: lands both tables, probe works
-    CurationState(legacy_dir, **_GEO).backfill_embeddings(hist)
-    assert upgraded.embed_landed(spark)
+    CurationState(legacy_dir, **_GEO).backfill("embed", hist)
+    assert upgraded.landed(spark, "embed")
     kept = {
         r["doc_id"]
         for r in curate_increment(

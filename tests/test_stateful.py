@@ -16,7 +16,6 @@ from pyspark.sql import types as T
 from clickhouse_mysql_data_reader_spark.streaming.stateful import (
     pooled_flush_signals,
     stateful_latest_wins,
-    stateful_latest_wins_tws,
 )
 
 CHANGE_SCHEMA = T.StructType(
@@ -85,48 +84,6 @@ def test_latest_wins_suppresses_stale_across_batches(spark, tmp_path):
     assert rows == {(1, 5): "b", (2, 1): "x", (2, 2): "y"}
 
 
-def test_latest_wins_tws_same_contract(spark, tmp_path):
-    """The transformWithStateInPandas twin upholds the identical
-    cross-batch last-write-wins contract as the legacy operator (same
-    fixture, same expected acceptances). Skips where protobuf (the
-    transformWithState state protocol's dependency) is unavailable —
-    the operator itself raises a clear error there, asserted below."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        stream = spark.readStream.schema(CHANGE_SCHEMA).json(str(tmp_path))
-        with pytest.raises(RuntimeError, match="protobuf"):
-            stateful_latest_wins_tws(stream, ["pk"], "ver")
-        pytest.skip("protobuf not available: transformWithState gated off")
-    src = tmp_path / "lwt_src"
-    _write_jsonl(
-        src,
-        [
-            [
-                {"pk": 1, "ver": 3, "val": "a"},
-                {"pk": 1, "ver": 5, "val": "b"},
-                {"pk": 2, "ver": 1, "val": "x"},
-            ],
-            [
-                {"pk": 1, "ver": 4, "val": "stale"},
-                {"pk": 2, "ver": 1, "val": "dup"},
-                {"pk": 2, "ver": 2, "val": "y"},
-            ],
-        ],
-    )
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = stateful_latest_wins_tws(stream, ["pk"], "ver")
-    _run_to_memory(out, "lwt_out")
-    rows = {(r["pk"], r["ver"]): r["val"] for r in spark.sql("SELECT * FROM lwt_out").collect()}
-    assert rows == {(1, 5): "b", (2, 1): "x", (2, 2): "y"}
-
-
 def test_latest_wins_batch_internal_newest_only(spark, tmp_path):
     src = tmp_path / "lw2_src"
     _write_jsonl(src, [[{"pk": 7, "ver": v, "val": f"v{v}"} for v in (1, 9, 4)]])
@@ -135,95 +92,6 @@ def test_latest_wins_batch_internal_newest_only(spark, tmp_path):
     _run_to_memory(out, "lw2_out")
     rows = [tuple(r) for r in spark.sql("SELECT pk, ver, val FROM lw2_out").collect()]
     assert rows == [(7, 9, "v9")]
-
-
-class _StubValueState:
-    """Duck-typed ValueState: exists/get/update, nothing else — exactly
-    the surface _LatestWins touches."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class _StubHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _StubValueState())
-
-
-def test_latest_wins_tws_processor_logic_with_stub_handle():
-    """Drive the transformWithState processor's actual selection +
-    compare-and-update path WITHOUT protobuf or a streaming query: the
-    class is module-level (stateful.py:_make_latest_wins_processor) so
-    a stubbed handle/ValueState exercises handleInputRows directly.
-    Same fixture and expected acceptances as the streaming contract
-    tests above — this is the execution coverage for the logic the
-    protobuf-gated integration test skips in this container."""
-    import pandas as pd
-
-    from clickhouse_mysql_data_reader_spark.streaming.stateful import (
-        _make_latest_wins_processor,
-    )
-
-    proc = _make_latest_wins_processor("ver")()
-    proc.init(_StubHandle())
-
-    def feed(rows_chunks):
-        out = list(
-            proc.handleInputRows((1,), (pd.DataFrame(c) for c in rows_chunks), None)
-        )
-        assert len(out) <= 1
-        return None if not out else out[0].iloc[0].to_dict()
-
-    # batch 0, two Arrow chunks: newest (ver 5) wins across chunks
-    got = feed(
-        [
-            [{"pk": 1, "ver": 3, "val": "a"}, {"pk": 1, "ver": 5, "val": "b"}],
-            [{"pk": 1, "ver": 1, "val": "old"}],
-        ]
-    )
-    assert got == {"pk": 1, "ver": 5, "val": "b"}
-    # batch 1: stale (ver 4) suppressed by stored state
-    assert feed([[{"pk": 1, "ver": 4, "val": "stale"}]]) is None
-    # batch 2: duplicate of accepted version suppressed (strict >)
-    assert feed([[{"pk": 1, "ver": 5, "val": "dup"}]]) is None
-    # batch 3: advance
-    got = feed([[{"pk": 1, "ver": 6, "val": "new"}]])
-    assert got == {"pk": 1, "ver": 6, "val": "new"}
-    # batch 4: all-empty chunks emit nothing and leave state intact
-    assert feed([[]]) is None
-    assert proc._max_ver.get() == (6,)
-    # ties within a chunk -> last occurrence (binlog order)
-    proc2 = _make_latest_wins_processor("ver")()
-    proc2.init(_StubHandle())
-    out2 = list(
-        proc2.handleInputRows(
-            (2,),
-            iter(
-                [
-                    pd.DataFrame(
-                        [
-                            {"pk": 2, "ver": 9, "val": "first"},
-                            {"pk": 2, "ver": 9, "val": "last"},
-                        ]
-                    )
-                ]
-            ),
-            None,
-        )
-    )
-    assert out2[0].iloc[0]["val"] == "last"
 
 
 @pytest.mark.slow

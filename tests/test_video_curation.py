@@ -126,8 +126,8 @@ def test_curate_increment_video_bootstrap_and_vs_history(spark, tmp_path):
     state = _vstate(tmp_path)
     kept1 = {r["doc_id"] for r in curate_increment(b1, state, cfg=cfg).collect()}
     assert kept1 == {1, 3}
-    assert state.video_landed(spark)
-    fps = state.video_fps(spark)
+    assert state.landed(spark, "video")
+    fps = state.read(spark, "video_fps")
     per_doc = {
         r["doc_id"]: r["count"]
         for r in fps.groupBy("doc_id").count().collect()
@@ -159,9 +159,9 @@ def test_curate_increment_video_state_validation(spark, tmp_path):
         b1, plain, cfg=CurationConfig(near_dup_jaccard=0.9)
     ).localCheckpoint()
     upgraded = CurationState(legacy, video_every_ms=1000)
-    with pytest.raises(ValueError, match="backfill_video_fps"):
+    with pytest.raises(ValueError, match=r"backfill\('video'"):
         curate_increment(b2, upgraded, cfg=cfg)
-    upgraded.backfill_video_fps(kept_hist)
+    upgraded.backfill("video", kept_hist)
     kept2 = {r["doc_id"] for r in curate_increment(b2, upgraded, cfg=cfg).collect()}
     assert kept2 == set()
 
